@@ -35,7 +35,7 @@ from rottnest_spark.core.planner import (
     unindexed_files,
 )
 from rottnest_spark.core.refine import collect_candidates_bounded, read_candidates
-from rottnest_spark.sources.reader import read_parquet
+from rottnest_spark.sources.reader import read_parquet, scan_parquet
 from rottnest_spark.indices.base import BRUTE_FORCE, SparkIndex
 
 
@@ -1027,7 +1027,7 @@ class ParquetLake:
                 if self.fs.isdir(d)
             ] or [e["index_path"]]
             for t in tables:
-                df = self.spark.read.parquet(t).persist()
+                df = scan_parquet(self.spark, t).persist()
                 df.count()  # materialize now
                 self._cached = getattr(self, "_cached", {})
                 self._cached[t] = df
@@ -1108,7 +1108,7 @@ class ParquetLake:
             and self._search_row_filter() is None
         ):
             paths = [e["index_path"] for e in plan.entries]
-            keys = self.spark.read.parquet(*[f"{p}/keys" for p in paths])
+            keys = scan_parquet(self.spark, *[f"{p}/keys" for p in paths])
             entry_files = {f for e in plan.entries for f in e["file_paths"]}
             if entry_files - set(plan.covered_files):
                 from rottnest_spark.core.smalldf import local_df

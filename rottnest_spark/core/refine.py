@@ -4,7 +4,7 @@
 
 Two fetch paths, chosen by candidate granularity:
 
-- **file granularity** (row_group == -1): `spark.read.parquet(*files)` — the
+- **file granularity** (row_group == -1): `read_parquet(spark, files)` — the
   native vectorized reader, whole-stage codegen, predicate pushdown. This is
   the default path; at 100 TB the win is reading 20 files instead of 20k.
 - **row-group granularity**: a `mapInPandas` over the candidate list doing
@@ -62,7 +62,13 @@ def collect_candidates_bounded(
     Stale-entry liveness (index entries can reference files since deleted
     from the lake) is pushed into Spark as a broadcast semi-join, and only
     when staleness is actually possible — filtering driver-side after a
-    LIMIT would silently drop live candidates."""
+    LIMIT would silently drop live candidates.
+
+    Units are de-duplicated here, on at most threshold+1 rows, so a probe
+    needs no `.distinct()` shuffle. A unit repeats only when two catalog
+    entries cover one file (a lost `commit_build` race); the repeats then
+    count toward the threshold, which only makes the fallback come
+    sooner."""
     from pyspark.sql import functions as F
 
     if entry_files - covered:
@@ -80,7 +86,7 @@ def collect_candidates_bounded(
         rows = cands.limit(threshold + 1).collect()
         if len(rows) > threshold:
             return None
-    return [(r["file_path"], r["row_group"]) for r in rows]
+    return list(dict.fromkeys((r["file_path"], r["row_group"]) for r in rows))
 
 
 def read_candidates(

@@ -16,6 +16,7 @@ from __future__ import annotations
 from abc import ABC, abstractmethod
 
 from pyspark.sql import DataFrame, SparkSession
+from rottnest_spark.sources.reader import scan_parquet
 
 #: sentinel returned by search() when the index cannot prune for this query
 BRUTE_FORCE = "__BRUTE_FORCE_EVERYTHING__"
@@ -78,7 +79,7 @@ class SparkIndex(ABC):
         """Merge several index directories into one. Default: union + rewrite
         (Spark's shuffle IS the reference's merge tree, src/lava/merge.rs:17-205).
         Reuses the index's probe-key sort so min/max pruning is preserved."""
-        df = spark.read.parquet(*index_paths)
+        df = scan_parquet(spark, *index_paths)
         self._write_index(
             df, out_path, sort_cols=self.sort_cols, unit_meta=self.unit_meta
         )
@@ -127,7 +128,7 @@ class SparkIndex(ABC):
         import os
 
         n = (
-            spark.read.parquet(out_path)
+            scan_parquet(spark, out_path)
             .select("file_path", "row_group")
             .distinct()
             .count()
@@ -152,7 +153,7 @@ class SparkIndex(ABC):
                     total += int(json.load(f)["n_units"])
             except (OSError, ValueError, KeyError):
                 total += (
-                    spark.read.parquet(p)
+                    scan_parquet(spark, p)
                     .select("file_path", "row_group")
                     .distinct()
                     .count()

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from rottnest_spark.core.layout import WHOLE_FILE
 from rottnest_spark.indices.base import BRUTE_FORCE, SparkIndex
 from rottnest_spark.indices.substring import provenance_file_col
-from rottnest_spark.sources.reader import read_parquet
+from rottnest_spark.sources.reader import read_parquet, scan_parquet
 
 
 class BloomIndex(SparkIndex):
@@ -145,7 +145,7 @@ class BloomIndex(SparkIndex):
             F.count(F.lit(1)).alias("n_keys")
         )
         set_bits = (
-            spark.read.parquet(f"{out_path}/words")
+            scan_parquet(spark, f"{out_path}/words")
             .groupBy("file_path", "row_group")
             .agg(F.sum(F.bit_count("bits")).alias("set_bits"))
         )
@@ -175,7 +175,7 @@ class BloomIndex(SparkIndex):
 
     def search(self, spark: SparkSession, index_paths: list[str], query):
         # saturation escape from meta (rows = units, metadata-scale)
-        meta = spark.read.parquet(*[f"{p}/meta" for p in index_paths])
+        meta = scan_parquet(spark, *[f"{p}/meta" for p in index_paths])
         fill = F.col("set_bits") / F.lit(float(self.m_bits))
         est = meta.agg(
             (
@@ -191,7 +191,7 @@ class BloomIndex(SparkIndex):
         from rottnest_spark.core.smalldf import local_df
 
         req = local_df(spark, lanes, "word bigint, req bigint", slices=1)
-        idx = spark.read.parquet(*[f"{p}/words" for p in index_paths])
+        idx = scan_parquet(spark, *[f"{p}/words" for p in index_paths])
         # static IN-list reaches the scan; word-sorted layout prunes row
         # groups; then a broadcast join of ≤k rows checks full lane masks
         hits = (
@@ -220,13 +220,13 @@ class BloomIndex(SparkIndex):
         """Union + re-OR per lane (associative; a no-op when units are
         disjoint, correct even if they are not), meta re-summed."""
         words = (
-            spark.read.parquet(*[f"{p}/words" for p in index_paths])
+            scan_parquet(spark, *[f"{p}/words" for p in index_paths])
             .groupBy("file_path", "row_group", "word")
             .agg(F.bit_or("bits").alias("bits"))
         )
         self._write_index(words, f"{out_path}/words", sort_cols=["word"])
         meta = (
-            spark.read.parquet(*[f"{p}/meta" for p in index_paths])
+            scan_parquet(spark, *[f"{p}/meta" for p in index_paths])
             .groupBy("file_path", "row_group")
             .agg(
                 F.max("n_keys").alias("n_keys"),

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from rottnest_spark.core.layout import WHOLE_FILE
 from rottnest_spark.indices.base import SparkIndex
 from rottnest_spark.indices.substring import provenance_file_col
-from rottnest_spark.sources.reader import read_parquet
+from rottnest_spark.sources.reader import read_parquet, scan_parquet
 
 K1 = 1.2
 B = 0.75
@@ -206,7 +206,7 @@ class BM25Index(SparkIndex):
         """Probe with an explicit token list (the expansion path already
         holds tokens — re-joining and re-tokenizing would mangle wordpiece
         '##' continuations)."""
-        postings = spark.read.parquet(*[f"{p}/postings" for p in index_paths])
+        postings = scan_parquet(spark, *[f"{p}/postings" for p in index_paths])
         return (
             postings.filter(F.col("token").isin(list(toks)))
             .select("file_path", "row_group")
@@ -216,13 +216,13 @@ class BM25Index(SparkIndex):
     def stats(self, spark: SparkSession, index_paths: list[str], query_tokens):
         """(df per query token, n_docs, total_len) merged across entries."""
         st = (
-            spark.read.parquet(*[f"{p}/stats" for p in index_paths])
+            scan_parquet(spark, *[f"{p}/stats" for p in index_paths])
             .filter(F.col("token").isin(list(query_tokens)))
             .groupBy("token")
             .agg(F.sum("df").alias("df"))
         )
         meta = (
-            spark.read.parquet(*[f"{p}/meta" for p in index_paths])
+            scan_parquet(spark, *[f"{p}/meta" for p in index_paths])
             .agg(F.sum("n_docs"), F.sum("total_len"))
             .collect()[0]
         )
@@ -254,16 +254,16 @@ class BM25Index(SparkIndex):
     def compact(
         self, spark: SparkSession, index_paths: list[str], out_path: str
     ) -> None:
-        postings = spark.read.parquet(*[f"{p}/postings" for p in index_paths])
+        postings = scan_parquet(spark, *[f"{p}/postings" for p in index_paths])
         self._write_index(postings.distinct(), f"{out_path}/postings", sort_cols=["token"])
         stats = (
-            spark.read.parquet(*[f"{p}/stats" for p in index_paths])
+            scan_parquet(spark, *[f"{p}/stats" for p in index_paths])
             .groupBy("token")
             .agg(F.sum("df").alias("df"))
         )
         self._write_index(stats, f"{out_path}/stats", sort_cols=["token"])
         meta = (
-            spark.read.parquet(*[f"{p}/meta" for p in index_paths])
+            scan_parquet(spark, *[f"{p}/meta" for p in index_paths])
             .agg(
                 F.sum("n_docs").alias("n_docs"),
                 F.sum("total_len").alias("total_len"),
@@ -470,8 +470,8 @@ def bm25_topk(
         expect_config=IndexCatalog.config_json(**index.config()),
     )
     if expansion_tokens and plan.entries:
-        vocab = spark.read.parquet(
-            *[f"{e['index_path']}/stats" for e in plan.entries]
+        vocab = scan_parquet(
+            spark, *[f"{e['index_path']}/stats" for e in plan.entries]
         )
         weights = expand_query(
             spark, query, vocab, expansion_tokens, qtoks=toks
@@ -570,7 +570,7 @@ def bm25_topk_many(
         stat_parts.append(st)
         n_docs += n
         total_len += tl
-        postings = spark.read.parquet(*[f"{p}/postings" for p in paths])
+        postings = scan_parquet(spark, *[f"{p}/postings" for p in paths])
         # one probe scan serves every query's candidate intersection
         probe = (
             postings.filter(F.col("token").isin(union_toks))

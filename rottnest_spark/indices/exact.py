@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from rottnest_spark.core.layout import WHOLE_FILE
 from rottnest_spark.indices.base import SparkIndex
 from rottnest_spark.indices.substring import provenance_file_col
-from rottnest_spark.sources.reader import read_parquet
+from rottnest_spark.sources.reader import read_parquet, scan_parquet
 
 
 def _hex_key(df: DataFrame, column: str):
@@ -127,13 +127,13 @@ class ExactIndex(SparkIndex):
             return self.search_range(spark, index_paths, *query)
         query = _hex_query(query)
         if self.store_keys:
-            keys = spark.read.parquet(*[f"{p}/keys" for p in index_paths])
-            return (
-                keys.filter(F.col("key") == F.lit(query))
-                .select("file_path", "row_group")
-                .distinct()
+            keys = scan_parquet(spark, *[f"{p}/keys" for p in index_paths])
+            # (file, row_group, key) is unique per entry; a unit repeats
+            # only across entries, and the bounded collect de-duplicates
+            return keys.filter(F.col("key") == F.lit(query)).select(
+                "file_path", "row_group"
             )
-        zones = spark.read.parquet(*[f"{p}/zone" for p in index_paths])
+        zones = scan_parquet(spark, *[f"{p}/zone" for p in index_paths])
         return zones.filter(
             (F.col("min_key") <= F.lit(query)) & (F.col("max_key") >= F.lit(query))
         ).select("file_path", "row_group")
@@ -150,7 +150,7 @@ class ExactIndex(SparkIndex):
         reference deleted files)."""
         if not self.store_keys:
             return None
-        keys = spark.read.parquet(*[f"{p}/keys" for p in index_paths])
+        keys = scan_parquet(spark, *[f"{p}/keys" for p in index_paths])
         hits = keys.filter(F.col("key") == F.lit(_hex_query(query)))
         if live_files is not None:
             from rottnest_spark.core.smalldf import local_df
@@ -171,7 +171,7 @@ class ExactIndex(SparkIndex):
         the whole batch at once, versus one scan per key."""
         probes = [_hex_query(q) for q in queries]
         if self.store_keys:
-            keys = spark.read.parquet(*[f"{p}/keys" for p in index_paths])
+            keys = scan_parquet(spark, *[f"{p}/keys" for p in index_paths])
             hits = (
                 keys.filter(F.col("key").isin(probes))
                 .select("key", "file_path", "row_group")
@@ -184,8 +184,8 @@ class ExactIndex(SparkIndex):
                 )
                 for q, p in zip(queries, probes)
             }
-        zones = spark.read.parquet(
-            *[f"{p}/zone" for p in index_paths]
+        zones = scan_parquet(
+            spark, *[f"{p}/zone" for p in index_paths]
         ).localCheckpoint(eager=True)
         return {
             q: zones.filter(
@@ -199,7 +199,7 @@ class ExactIndex(SparkIndex):
         zone-map range scan. Uses the zone table regardless of store_keys
         (O(units) rows beats a key-table range for wide ranges)."""
         lo, hi = _hex_query(lo), _hex_query(hi)
-        zones = spark.read.parquet(*[f"{p}/zone" for p in index_paths])
+        zones = scan_parquet(spark, *[f"{p}/zone" for p in index_paths])
         return zones.filter(
             (F.col("min_key") <= F.lit(hi)) & (F.col("max_key") >= F.lit(lo))
         ).select("file_path", "row_group")
@@ -222,10 +222,10 @@ class ExactIndex(SparkIndex):
     def compact(
         self, spark: SparkSession, index_paths: list[str], out_path: str
     ) -> None:
-        zones = spark.read.parquet(*[f"{p}/zone" for p in index_paths])
+        zones = scan_parquet(spark, *[f"{p}/zone" for p in index_paths])
         self._write_index(zones, f"{out_path}/zone")
         if self.store_keys:
-            keys = spark.read.parquet(*[f"{p}/keys" for p in index_paths])
+            keys = scan_parquet(spark, *[f"{p}/keys" for p in index_paths])
             self._write_index(keys, f"{out_path}/keys", sort_cols=["key"])
 
 
@@ -253,7 +253,7 @@ class PrefixSearch(ExactIndex):
 
     def search(self, spark: SparkSession, index_paths: list[str], query):
         query = _hex_query(query)
-        zones = spark.read.parquet(*[f"{p}/zone" for p in index_paths])
+        zones = scan_parquet(spark, *[f"{p}/zone" for p in index_paths])
         return zones.filter(
             (F.substring(F.col("min_key"), 1, len(query)) <= F.lit(query))
             & (F.col("max_key") >= F.lit(query))

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from rottnest_spark.core.layout import WHOLE_FILE
 from rottnest_spark.indices.base import SparkIndex
 from rottnest_spark.indices.substring import provenance_file_col
-from rottnest_spark.sources.reader import read_parquet
+from rottnest_spark.sources.reader import read_parquet, scan_parquet
 
 
 def deletion_variants(s: str) -> list[str]:
@@ -105,7 +105,7 @@ class FuzzyIndex(SparkIndex):
         neighborhood (union semantics — distance-1 matches need only one
         shared variant)."""
         variants = deletion_variants(query)
-        idx = spark.read.parquet(*index_paths)
+        idx = scan_parquet(spark, *index_paths)
         return (
             idx.filter(F.col("variant").isin(variants))
             .select("file_path", "row_group")
@@ -131,7 +131,7 @@ def _search_many(self, spark, index_paths, queries):
     other index types' search_many."""
     per_q = {q: deletion_variants(q) for q in queries}
     union = sorted({v for vs in per_q.values() for v in vs})
-    idx = spark.read.parquet(*index_paths)
+    idx = scan_parquet(spark, *index_paths)
     hits = (
         idx.filter(F.col("variant").isin(union))
         .select("variant", "file_path", "row_group")

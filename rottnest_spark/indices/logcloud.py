@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from rottnest_spark.core.layout import WHOLE_FILE
 from rottnest_spark.indices.base import BRUTE_FORCE, SparkIndex
 from rottnest_spark.indices.substring import provenance_file_col
-from rottnest_spark.sources.reader import read_parquet
+from rottnest_spark.sources.reader import read_parquet, scan_parquet
 
 VAR_RUN_RE = "[a-zA-Z0-9]*[0-9][a-zA-Z0-9]*"  # digit-containing alnum run
 PLACEHOLDER = "⟨V⟩"  # ⟨V⟩ — cannot collide with log text
@@ -337,7 +337,7 @@ class LogIndex(SparkIndex):
             try:
                 got = {
                     int(r["vtype"])
-                    for r in spark.read.parquet(f"{p}/gramtypes").collect()
+                    for r in scan_parquet(spark, f"{p}/gramtypes").collect()
                 }
             except Exception:
                 return set()
@@ -353,8 +353,8 @@ class LogIndex(SparkIndex):
         exact contains() verifies the survivors."""
         grams_t = sorted({t[i : i + GRAM] for i in range(len(t) - GRAM + 1)})
         tmask = type_bitmask(t)
-        valgrams = spark.read.parquet(
-            *[f"{p}/valgrams" for p in index_paths]
+        valgrams = scan_parquet(
+            spark, *[f"{p}/valgrams" for p in index_paths]
         )
         return (
             valgrams.filter(
@@ -375,8 +375,8 @@ class LogIndex(SparkIndex):
             # No digit-run to anchor pruning (the reference's template/flag-0
             # tier): correctness requires the full refine scan.
             return BRUTE_FORCE
-        variables = spark.read.parquet(*[f"{p}/variables" for p in index_paths])
-        dicts = spark.read.parquet(*[f"{p}/dict" for p in index_paths])
+        variables = scan_parquet(spark, *[f"{p}/variables" for p in index_paths])
+        dicts = scan_parquet(spark, *[f"{p}/dict" for p in index_paths])
         covered = self._covered_types(spark, index_paths)
         cand = None
         for t in vtoks:
@@ -442,7 +442,7 @@ class LogIndex(SparkIndex):
             m = type_bitmask(t)
             return F.col("vtype").bitwiseAND(F.lit(m)) == F.lit(m)
 
-        dicts = spark.read.parquet(*[f"{p}/dict" for p in index_paths])
+        dicts = scan_parquet(spark, *[f"{p}/dict" for p in index_paths])
         routed_row = dicts.agg(
             *[
                 F.max(
@@ -460,8 +460,8 @@ class LogIndex(SparkIndex):
 
         matrix = None
         if prunable:
-            variables = spark.read.parquet(
-                *[f"{p}/variables" for p in index_paths]
+            variables = scan_parquet(
+                spark, *[f"{p}/variables" for p in index_paths]
             )
             matrix = (
                 variables.groupBy("file_path", "row_group")
@@ -509,19 +509,19 @@ class LogIndex(SparkIndex):
         self, spark: SparkSession, index_paths: list[str], out_path: str
     ) -> None:
         templates = (
-            spark.read.parquet(*[f"{p}/templates" for p in index_paths])
+            scan_parquet(spark, *[f"{p}/templates" for p in index_paths])
             .groupBy("template")
             .agg(F.sum("n").alias("n"))
         )
         self._write_index(templates, f"{out_path}/templates")
         # a value dict-routed in ANY entry has incomplete postings in the
         # merged view — it must stay dict-routed after the merge
-        dicts = spark.read.parquet(
-            *[f"{p}/dict" for p in index_paths]
+        dicts = scan_parquet(
+            spark, *[f"{p}/dict" for p in index_paths]
         ).distinct()
         self._write_index(dicts, f"{out_path}/dict", sort_cols=["value"])
-        all_vars = spark.read.parquet(
-            *[f"{p}/variables" for p in index_paths]
+        all_vars = scan_parquet(
+            spark, *[f"{p}/variables" for p in index_paths]
         ).distinct()
         dv = dicts.select(
             F.col("vtype").alias("d_vtype"), F.col("value").alias("d_value")
@@ -542,7 +542,7 @@ class LogIndex(SparkIndex):
         # values to a now-covered vtype instead of poisoning coverage).
         # Read the WRITTEN table back — same one-pass discipline as build.
         self._write_gram_tier(
-            spark, spark.read.parquet(f"{out_path}/variables"), out_path
+            spark, scan_parquet(spark, f"{out_path}/variables"), out_path
         )
 
     def narrowing_stats(
@@ -553,8 +553,8 @@ class LogIndex(SparkIndex):
         pruning-ratio evidence the `.hawaii` tier exists for. Counts are
         over the DISTINCT values of compatible vtypes (what a contains()
         scan must examine) vs the gram tier's verified candidates."""
-        variables = spark.read.parquet(
-            *[f"{p}/variables" for p in index_paths]
+        variables = scan_parquet(
+            spark, *[f"{p}/variables" for p in index_paths]
         )
         covered = self._covered_types(spark, index_paths)
         out = {}

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from rottnest_spark.core.layout import WHOLE_FILE
 from rottnest_spark.indices.base import BRUTE_FORCE, SparkIndex
 from rottnest_spark.indices.substring import provenance_file_col
-from rottnest_spark.sources.reader import read_parquet
+from rottnest_spark.sources.reader import read_parquet, scan_parquet
 
 
 class StatsSketchIndex(SparkIndex):
@@ -83,7 +83,7 @@ class StatsSketchIndex(SparkIndex):
     ) -> dict:
         """Merge per-file sketches (optionally restricted to `files`) into
         one estimate. Returns {"estimate", "n_rows", "n_nonnull", "n_files"}."""
-        df = spark.read.parquet(*index_paths)
+        df = scan_parquet(spark, *index_paths)
         if files is not None:
             df = df.filter(F.col("file_path").isin(list(files)))
         row = df.agg(
@@ -153,7 +153,7 @@ class QuantileSketchIndex(SparkIndex):
 
     @staticmethod
     def _merged(spark: SparkSession, index_paths: list[str], files):
-        df = spark.read.parquet(*index_paths)
+        df = scan_parquet(spark, *index_paths)
         if files is not None:
             df = df.filter(F.col("file_path").isin(list(files)))
         return df
@@ -263,7 +263,7 @@ class ThetaSketchIndex(SparkIndex):
         index_paths: list[str],
         files: list[str] | None = None,
     ) -> int:
-        df = spark.read.parquet(*index_paths)
+        df = scan_parquet(spark, *index_paths)
         if files is not None:
             df = df.filter(F.col("file_path").isin(list(files)))
         row = df.agg(
@@ -284,7 +284,7 @@ class ThetaSketchIndex(SparkIndex):
         are the meaningful call — new batch vs existing lake)."""
         if not files_a or not files_b:
             return {"a": 0, "b": 0, "overlap": 0}
-        df = spark.read.parquet(*index_paths)
+        df = scan_parquet(spark, *index_paths)
         side = F.when(
             F.col("file_path").isin(list(files_a)), F.lit("a")
         ).otherwise(F.lit("b"))

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from rottnest_spark.core.layout import WHOLE_FILE
 from rottnest_spark.indices.base import BRUTE_FORCE, SparkIndex
-from rottnest_spark.sources.reader import read_parquet
+from rottnest_spark.sources.reader import read_parquet, scan_parquet
 
 
 def provenance_file_col():
@@ -49,16 +49,6 @@ def provenance_file_col():
     from rottnest_spark.sources.reader import uri_path_col
 
     return uri_path_col(F.col("_metadata.file_path"))
-
-
-def char_ngrams(col, n: int):
-    """Distinct character n-grams of a string column as an array (used by
-    callers that need the per-row array; the index build uses the faster
-    flat-position form — transform() lambdas evaluate interpreted)."""
-    starts = F.when(
-        F.length(col) >= n, F.sequence(F.lit(1), F.length(col) - F.lit(n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.array_distinct(F.transform(starts, lambda i: col.substr(i, F.lit(n))))
 
 
 #: regex metacharacters; escaping one of these yields a literal char
@@ -495,7 +485,7 @@ class SubstringIndex(SparkIndex):
         grams = self.query_grams(query)
         if not grams:
             return BRUTE_FORCE  # query shorter than gram size — index can't prune
-        idx = spark.read.parquet(*index_paths)
+        idx = scan_parquet(spark, *index_paths)
         df_rows = (
             idx.filter(F.col("gram").isin(grams)).groupBy("gram").count().collect()
         )
@@ -508,11 +498,15 @@ class SubstringIndex(SparkIndex):
             n_units = self.read_unit_meta(spark, index_paths)
             if n_units and gram_df[probe[0]] >= self.unselective_frac * n_units:
                 return BRUTE_FORCE
+        # a row count needs one exchange where count_distinct needs two;
+        # (gram, unit) is unique within an entry, so only a unit repeated
+        # across entries can pass with a gram missing, and the refine
+        # makes that superset exact
         return (
             idx.filter(F.col("gram").isin(probe))
             .groupBy("file_path", "row_group")
-            .agg(F.count_distinct("gram").alias("ngrams"))
-            .filter(F.col("ngrams") == len(probe))
+            .count()
+            .filter(F.col("count") >= len(probe))
             .select("file_path", "row_group")
         )
 
@@ -531,7 +525,7 @@ class SubstringIndex(SparkIndex):
         if not batched:
             return out
         all_grams = sorted({g for gs in batched.values() for g in gs})
-        idx = spark.read.parquet(*index_paths)
+        idx = scan_parquet(spark, *index_paths)
         df_rows = (
             idx.filter(F.col("gram").isin(all_grams))
             .groupBy("gram")

@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 
 from rottnest_spark.core.layout import WHOLE_FILE
 from rottnest_spark.indices.base import BRUTE_FORCE, SparkIndex
-from rottnest_spark.sources.reader import read_parquet
+from rottnest_spark.sources.reader import read_parquet, scan_parquet
 from rottnest_spark.indices.substring import provenance_file_col
 
 
@@ -205,7 +205,7 @@ class SuffixArrayIndex(SparkIndex):
         probe = self._probe_prefix(query)
         if probe is None:
             return BRUTE_FORCE  # empty after normalization — cannot prune
-        idx = spark.read.parquet(*index_paths)
+        idx = scan_parquet(spark, *index_paths)
         cands = (
             idx.filter(F.col("suffix").startswith(F.lit(probe)))
             .select("file_path", "row_group")
@@ -231,7 +231,7 @@ class SuffixArrayIndex(SparkIndex):
         todo = {q: p for q, p in probes.items() if p is not None}
         if not todo:
             return out
-        idx = spark.read.parquet(*index_paths)
+        idx = scan_parquet(spark, *index_paths)
         pred = None
         for p in todo.values():
             c = F.col("suffix").startswith(F.lit(p))

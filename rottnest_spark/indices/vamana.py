@@ -47,7 +47,7 @@ from rottnest_spark.indices.vector import (
     ensure_float_vectors,
     provenance_file_col,
 )
-from rottnest_spark.sources.reader import read_parquet
+from rottnest_spark.sources.reader import read_parquet, scan_parquet
 
 GRAPH_SCHEMA = (
     "cluster_id int, node_id int, file_path string, row_group int, pos int, "
@@ -421,7 +421,7 @@ class VamanaIndex(VectorIndex):
             return search_cluster(pdf)
 
         top = (
-            spark.read.parquet(*[f"{p}/graph" for p in sorted(by_path)])
+            scan_parquet(spark, *[f"{p}/graph" for p in sorted(by_path)])
             .filter(F.col("cluster_id").isin(all_cids))
             .withColumn("__entry", self._entry_of_col())
             .groupBy("__entry", "cluster_id")
@@ -465,7 +465,7 @@ class VamanaIndex(VectorIndex):
             slices=1,
         )
         return (
-            spark.read.parquet(*[f"{p}/graph" for p in sorted(by_path)])
+            scan_parquet(spark, *[f"{p}/graph" for p in sorted(by_path)])
             .filter(F.col("cluster_id").isin(all_cids))
             .withColumn("__entry", self._entry_of_col())
             .join(F.broadcast(pairs), ["__entry", "cluster_id"], "left_semi")
@@ -482,8 +482,8 @@ class VamanaIndex(VectorIndex):
         offset = 0
         cent_parts, graph_parts = [], []
         for p in index_paths:
-            c = spark.read.parquet(f"{p}/centroids")
-            g = spark.read.parquet(f"{p}/graph")
+            c = scan_parquet(spark, f"{p}/centroids")
+            g = scan_parquet(spark, f"{p}/graph")
             cent_parts.append(
                 c.select(
                     (F.col("centroid_id") + offset).alias("centroid_id"),

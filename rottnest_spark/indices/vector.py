@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from rottnest_spark.core.layout import WHOLE_FILE
 from rottnest_spark.indices.base import SparkIndex
 from rottnest_spark.indices.substring import provenance_file_col
-from rottnest_spark.sources.reader import read_parquet
+from rottnest_spark.sources.reader import read_parquet, scan_parquet
 
 
 def ensure_float_vectors(df: DataFrame, column: str) -> DataFrame:
@@ -307,7 +307,7 @@ class VectorIndex(SparkIndex):
             # codebooks, so no extra data collect either.
             self._build_pq(spark, files, column, out_path, centers, sample=x)
             postings = (
-                spark.read.parquet(f"{out_path}/pq_codes")
+                scan_parquet(spark, f"{out_path}/pq_codes")
                 .select("centroid_id", "file_path", "row_group")
                 .distinct()
             )
@@ -474,7 +474,7 @@ class VectorIndex(SparkIndex):
             lambda acc, v: acc + v,
         )
         return (
-            spark.read.parquet(*[f"{p}/centroids" for p in index_paths])
+            scan_parquet(spark, *[f"{p}/centroids" for p in index_paths])
             .select(
                 self._entry_of_col().alias("__entry"),
                 "centroid_id",
@@ -547,7 +547,7 @@ class VectorIndex(SparkIndex):
             slices=1,
         )
         return (
-            spark.read.parquet(*[f"{p}/postings" for p in by_path])
+            scan_parquet(spark, *[f"{p}/postings" for p in by_path])
             .filter(F.col("centroid_id").isin(all_cids))
             .withColumn("__entry", self._entry_of_col())
             .join(F.broadcast(pairs), ["__entry", "centroid_id"], "left_semi")
@@ -579,7 +579,7 @@ class VectorIndex(SparkIndex):
 
         # ONE job for every touched entry's codebook (was: one per entry)
         book_rows = (
-            spark.read.parquet(*[f"{p}/pq_codebook" for p in paths])
+            scan_parquet(spark, *[f"{p}/pq_codebook" for p in paths])
             .select(
                 self._entry_of_col().alias("__entry"), "sub", "code", "center"
             )
@@ -646,7 +646,7 @@ class VectorIndex(SparkIndex):
         # ONE scan of every probed entry's pq_codes; job count per query is
         # independent of entry count (round-4 verdict item 3)
         top = (
-            spark.read.parquet(*[f"{p}/pq_codes" for p in paths])
+            scan_parquet(spark, *[f"{p}/pq_codes" for p in paths])
             .filter(F.col("centroid_id").isin(all_cids))
             .withColumn("__entry", self._entry_of_col())
             .mapInPandas(
@@ -681,8 +681,8 @@ class VectorIndex(SparkIndex):
         offset = 0
         cent_parts, post_parts = [], []
         for p in index_paths:
-            c = spark.read.parquet(f"{p}/centroids")
-            pc = spark.read.parquet(f"{p}/postings")
+            c = scan_parquet(spark, f"{p}/centroids")
+            pc = scan_parquet(spark, f"{p}/postings")
             cent_parts.append(
                 c.select(
                     (F.col("centroid_id") + offset).alias("centroid_id"), "centroid"
@@ -858,7 +858,7 @@ def knn_topk_many(
         # never the full posting list (unselective-probe escape) — over
         # budget the whole batch falls back to the one-scan exact path
         hits = (
-            spark.read.parquet(f"{p}/postings")
+            scan_parquet(spark, f"{p}/postings")
             .filter(F.col("centroid_id").isin(cids))
             .select("centroid_id", "file_path", "row_group")
             .limit(budget + 1)

@@ -465,6 +465,27 @@ def simhash_pairs(
 # --------------------------------------------------------------------------
 
 
+def ppjoin_overlap_bound(threshold: float, size_sum: str):
+    """ceil(t/(1+t)·(|A|+|B|)), the least |A∩B| of a pair with
+    jaccard >= t, in exact integer arithmetic over the SQL expression
+    `size_sum`. The double form over-requires by one wherever
+    t/(1+t)·s lands a hair above an integer (t = 0.18, s = 413: 64
+    instead of 63) and prunes a pair the verify accepts. t/(1+t) is
+    p/q from the threshold's decimal literal and ceil(p·s/q) =
+    (p·s + q - 1) div q. A long holds p·s for s < 2^32 when p < 2^31;
+    longer literals compute in decimal."""
+    from fractions import Fraction
+
+    t = Fraction(str(threshold))
+    r = t / (1 + t)
+    p, q = r.numerator, r.denominator
+    typ = "bigint" if p < 2**31 else "decimal(38,0)"
+    return F.expr(
+        f"(CAST({p} AS {typ}) * CAST({size_sum} AS {typ}) "
+        f"+ CAST({q - 1} AS {typ})) div CAST({q} AS {typ})"
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -533,10 +554,7 @@ def ngram_jaccard_pairs(
                 F.col("a.sz") - F.col("a.pos"),
                 F.col("b.sz") - F.col("b.pos"),
             )
-            >= F.ceil(
-                F.lit(threshold / (1.0 + threshold))
-                * (F.col("a.sz") + F.col("b.sz"))
-            )
+            >= ppjoin_overlap_bound(threshold, "a.sz + b.sz")
         )
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()

@@ -48,6 +48,7 @@ import os
 import re
 
 from rottnest_spark.core.fs import canon_path
+from rottnest_spark.sources.reader import scan_parquet
 from rottnest_spark.sources.reader import uri_path_col as _uri_path
 from rottnest_spark.core.lake import ParquetLake
 from rottnest_spark.sources.avro_lite import read_ocf
@@ -1074,7 +1075,7 @@ def _eq_delete_rows_df(spark, dels: list[dict], cols: list[str]):
         "__dfile string, __dseq long",
     )
     return (
-        spark.read.parquet(*paths)
+        scan_parquet(spark, *paths)
         .select(
             *[F.col(c).alias(f"__eq_{c}") for c in cols],
             _uri_path(F.col("_metadata.file_path")).alias("__dfile"),
@@ -1107,7 +1108,7 @@ def delete_pairs_df(
             col, "^" + re.escape(loc) + "/", tp.rstrip("/") + "/"
         )
     return (
-        spark.read.parquet(*delete_files)
+        scan_parquet(spark, *delete_files)
         .select(
             col.alias("__del_path"),
             F.col("pos").cast("long").alias("__del_pos"),
@@ -1198,34 +1199,6 @@ def position_delete_pairs_df(spark, state: dict, location: str, table_path: str)
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def apply_position_deletes(
-    spark, df, delete_files: list[str], location: str = "", table_path: str = ""
-):
-    """Apply Iceberg positional delete files to a DataFrame that was read
-    WITH Spark's `_metadata` file column still reachable: one distributed
-    left-anti join on (normalized file path, row position). The delete
-    files' `file_path` column records absolute paths (as manifests do),
-    rebased from `location` onto `table_path` for relocated tables;
-    `_metadata.file_path` is a file: URI — both sides normalize to a bare
-    absolute path. Plan shape: delete sets are a small fraction of data
-    rows, and AQE broadcast-converts the anti-join when they fit."""
-    from pyspark.sql import functions as F
-
-    norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
-    pairs = delete_pairs_df(
-        spark, delete_files, location=location, table_path=table_path
-    )
-    tagged = df.withColumns(
-        {
-            "__del_path": _uri_path(F.col("_metadata.file_path")),
-            "__del_pos": F.col("_metadata.row_index"),
-        }
-    )
-    return tagged.join(pairs, ["__del_path", "__del_pos"], "left_anti").drop(
-        "__del_path", "__del_pos"
-    )
 
 
 def _snapshot_state(md: dict, snap: dict, table_path: str, fs=None) -> dict:
@@ -2323,7 +2296,7 @@ def equality_delete_positions(spark, state: dict, md: dict):
     cands = sorted(kept)
     if not cands:
         return spark.createDataFrame([], "__path string, __pos long")
-    df = spark.read.parquet(*cands).withColumns(
+    df = scan_parquet(spark, *cands).withColumns(
         {
             "__path": _uri_path(F.col("_metadata.file_path")),
             "__pos": F.col("_metadata.row_index"),

@@ -48,6 +48,7 @@ import uuid
 from rottnest_spark.core.fs import LakeFS, LocalFS, canon_path
 from rottnest_spark.core.tuning import cluster_for_hive_write
 from rottnest_spark.sources.avro_lite import write_ocf
+from rottnest_spark.sources.reader import scan_parquet
 from rottnest_spark.sources.reader import uri_path_col as _uri_path
 
 #: manifest-list entry schema (spec fields the ecosystem expects; our
@@ -476,15 +477,6 @@ def _partition_fields(md: dict | None) -> list[dict]:
     )
 
     return partition_fields_from_spec(md or {})
-
-
-def _identity_partition_fields(md: dict | None) -> list[str]:
-    """Identity-transform partition column names, validating the WHOLE
-    spec is writable (transform set above). READS are unaffected and go
-    through iceberg.partition_columns_from_metadata, which may
-    legitimately ignore non-identity transforms (their source columns
-    stay physical in the data files)."""
-    return [pf["name"] for pf in _partition_fields(md) if pf["kind"] == "identity"]
 
 
 def _commit_snapshot(
@@ -1243,7 +1235,7 @@ def iceberg_delete_rows(
         raise ValueError(f"{table_path} has no live data files")
     norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
     pairs = (
-        spark.read.parquet(*data)
+        scan_parquet(spark, *data)
         .filter(predicate if not isinstance(predicate, str) else F.expr(predicate))
         .select(
             _uri_path(F.col("_metadata.file_path")).alias("file_path"),
@@ -1287,7 +1279,7 @@ def iceberg_delete_rows(
     # the files our positions address (cheap: the staged pairs are tiny)
     affected = [
         r.file_path
-        for r in spark.read.parquet(*moved)
+        for r in scan_parquet(spark, *moved)
         .select("file_path")
         .distinct()
         .collect()
@@ -1342,7 +1334,7 @@ def iceberg_rewrite_deletes(
     norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
 
     def _tagged(files):
-        return spark.read.parquet(*files).withColumns(
+        return scan_parquet(spark, *files).withColumns(
             {
                 "__path": _uri_path(F.col("_metadata.file_path")),
                 "__pos": F.col("_metadata.row_index"),

@@ -39,7 +39,6 @@ import numpy as np
 
 from rottnest_spark.sources.roaring import (
     PORTABLE_MAGIC,
-    roaring64_decode,
     roaring64_encode,
 )
 
@@ -51,11 +50,6 @@ DV_BLOB_TYPE = "deletion-vector-v1"
 def iceberg_vector_encode(positions) -> bytes:
     """Row positions → the spec's portable 64-bit roaring bytes."""
     return roaring64_encode(positions)[4:]  # drop Delta's int32 magic
-
-
-def iceberg_vector_decode(data: bytes) -> np.ndarray:
-    """Portable 64-bit roaring bytes → sorted uint64 positions."""
-    return roaring64_decode(struct.pack("<i", PORTABLE_MAGIC) + bytes(data))
 
 
 def encode_dv_blob(positions) -> bytes:
@@ -208,16 +202,10 @@ def make_puffin_dv_decoder():
             )
         return _roaring(_struct.pack("<i", _pm) + body[4:])
 
-    decode.footer = _footer
     return decode
 
 
 _DECODE = make_puffin_dv_decoder()
-
-
-def read_puffin_footer(data: bytes) -> dict:
-    """Parsed footer payload ({"blobs": [...], "properties": {...}})."""
-    return _DECODE.footer(data)
 
 
 def puffin_dv_positions(

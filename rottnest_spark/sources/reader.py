@@ -6,12 +6,22 @@ events fixture). We read them via the legacy nanos-as-long session flag and
 rebuild a microsecond TimestampType column (`div 1000` truncation — the same
 µs truncation DuckDB applies to nanosecond parquet, keeping oracles aligned).
 
-Only a footer peek of ONE file decides whether conversion applies: the lake
-invariant (append-only, uniform schema) matches the reference's
-schema-on-read stance (column located by name, src/formats/parquet.rs:271-280).
+Only a footer peek of ONE file decides whether conversion applies: the
+lexicographically smallest path of the list, the same file Spark infers the
+scan's schema from. The lake invariant (append-only, uniform schema) matches
+the reference's schema-on-read stance (column located by name,
+src/formats/parquet.rs:271-280).
+
+Every scan, lake data and index tables alike, goes through `scan_parquet`,
+which skips Spark's schema-inference job once a schema is known (see its
+docstring and docs/SCALE.md, "Per-query job floor").
 """
 
 from __future__ import annotations
+
+import os
+import stat
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,8 +79,93 @@ def _scan(spark, files, schema, field_id):
     (sync_all prefetch, build/upsert overlaps) all read plain
     Spark-written parquet where both flags are false on every thread."""
     spark.conf.set(_FIELD_ID_FLAG, "true" if field_id else "false")
-    r = spark.read.schema(schema) if schema is not None else spark.read
-    return r.parquet(*files)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*files)
+    return scan_parquet(spark, *files)
+
+
+# -- schema memo ----------------------------------------------------------
+# Without a schema, `spark.read.parquet` runs a Spark job that reads one
+# footer to infer it: ~75-90 ms, more than a selective search spends on
+# data. With `mergeSchema` off Spark infers from exactly one file, the
+# lexicographically smallest leaf path of the list, converted under the
+# session flags below. So the schema is a function of that file and those
+# flags, and the memo keys on exactly them. The key names everything the
+# schema depends on, so one process-wide memo serves every session.
+
+#: session settings that change how a Parquet schema converts
+_INFER_FLAGS = (
+    _NANOS_FLAG,
+    _FIELD_ID_FLAG,
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_MERGE_FLAG = "spark.sql.parquet.mergeSchema"
+_GLOB_CHARS = set("*?[]{}\\")
+_SCHEMAS: dict = {}
+_SCHEMAS_MAX = 4096
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _smallest_path(paths) -> str:
+    """The path Spark infers a multi-path scan's schema from (and the one
+    the nanos peek reads): Spark sorts the listed leaf files by path."""
+    return min(paths)
+
+
+def _schema_key(spark: SparkSession, paths) -> tuple | None:
+    """(smallest path, its identity, the inference flags), or None when the
+    memo cannot know what Spark would infer: globs, URIs, relative or
+    unnormalized paths, a missing path or leafless directory, or schema
+    merging."""
+    if not paths or any(
+        not p.startswith("/") or p != os.path.normpath(p) or _GLOB_CHARS & set(p)
+        for p in paths
+    ):
+        return None
+    first = _smallest_path(paths)
+    # a directory's leaves sort as `dir/...`: when files and directories
+    # mix, `first` must also be smallest under that order, or a sibling
+    # such as `dir-2/...` may hold the leaf Spark actually reads
+    if first != min(paths, key=lambda p: p + "/"):
+        return None
+    if (spark.conf.get(_MERGE_FLAG, None) or "").lower() == "true":
+        return None
+    try:
+        st = os.stat(first)
+        is_dir = stat.S_ISDIR(st.st_mode)
+        if is_dir:
+            # no visible entry means no leaf here: Spark infers from the
+            # next path of the list, which the key does not name
+            with os.scandir(first) as it:
+                if all(e.name.startswith(("_", ".")) for e in it):
+                    return None
+    except OSError:
+        return None
+    # data files are immutable and index dirs write-once (named by uuid),
+    # so a path's identity stands for its schema: a rewrite in place moves
+    # a file's size or mtime, and a changed entry moves a directory's mtime
+    ident = (st.st_ino, st.st_mtime_ns, None if is_dir else st.st_size)
+    return (first, ident, tuple(spark.conf.get(f, None) for f in _INFER_FLAGS))
+
+
+def scan_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """`spark.read.parquet(*paths)` that reuses the schema Spark inferred
+    the last time it read the same smallest file under the same flags,
+    so a repeated scan plans without a Spark job."""
+    key = _schema_key(spark, paths)
+    if key is None:
+        return spark.read.parquet(*paths)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    with _SCHEMAS_LOCK:
+        if len(_SCHEMAS) >= _SCHEMAS_MAX:
+            _SCHEMAS.clear()
+        _SCHEMAS[key] = df.schema
+    return df
 
 
 def nanos_ts_columns(file: str) -> list[str]:
@@ -111,10 +206,10 @@ def read_parquet(
     """
     if schema is None:
         schema = _SCHEMA_PIN.get()
-    ns_cols = nanos_ts_columns(files[0])
+    ns_cols = nanos_ts_columns(_smallest_path(files))
     # Set the flag EXPLICITLY both ways: a stale true from an earlier read
     # would make a later non-ns read silently decode ns columns (present in
-    # other files of the list but not files[0]) as raw bigint; with the flag
+    # other files of the list but not the peeked one) as raw bigint; with the flag
     # false Spark fails loudly (PARQUET_TYPE_ILLEGAL) on such mixed lakes.
     spark.conf.set(_NANOS_FLAG, "true" if ns_cols else "false")
     df = _scan(spark, files, schema, field_id)
@@ -179,7 +274,7 @@ def read_parquet_tagged(
     (sources/changes.py) all build on it."""
     if schema is None:
         schema = _SCHEMA_PIN.get()
-    ns_cols = nanos_ts_columns(files[0])
+    ns_cols = nanos_ts_columns(_smallest_path(files))
     spark.conf.set(_NANOS_FLAG, "true" if ns_cols else "false")
     df = _scan(spark, files, schema, field_id).withColumns(
         {

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rottnest_spark.sources.reader import scan_parquet
+
 
 def keys_already_in_lake(lake, column: str) -> DataFrame:
     """The distinct LIVE key set of `column`: the exact-index key tables
@@ -50,7 +52,7 @@ def keys_already_in_lake(lake, column: str) -> DataFrame:
             "the index as its reference set"
         )
     paths = [f"{e['index_path']}/keys" for e in entries]
-    keys = lake.spark.read.parquet(*paths).select("key")
+    keys = scan_parquet(lake.spark, *paths).select("key")
     todo = unindexed_files(lake.catalog, "exact", column, lake.files)
     if todo:
         fresh = lake.read(todo)

@@ -53,6 +53,29 @@ def test_simhash_blocking_is_exact(spark, docs):
     assert len(got) > 0
 
 
+@pytest.mark.parametrize("t", [0.18, 0.43, 0.57, 0.59, 0.84, 0.86])
+def test_ppjoin_overlap_bound_is_exact(spark, t):
+    """ceil(t/(1+t)·s) computed in doubles over-requires by one at these
+    thresholds (t = 0.18, s = 413 gives 64, not 63) and prunes pairs the
+    verify accepts; the bound must equal the exact rational ceiling."""
+    from fractions import Fraction
+
+    r = Fraction(str(t)) / (1 + Fraction(str(t)))
+    got = {
+        row["s"]: row["need"]
+        for row in spark.range(5001)
+        .select(
+            F.col("id").alias("s"),
+            dedup.ppjoin_overlap_bound(t, "id").alias("need"),
+        )
+        .collect()
+    }
+    want = {s: -(-r.numerator * s // r.denominator) for s in range(5001)}
+    assert got == want
+    if t == 0.18:
+        assert got[413] == 63
+
+
 def test_exact_dup_groups_partition(spark, sf_dir):
     ev = read_parquet(spark, [f"{sf_dir}/events.parquet"])
     total = ev.count()

@@ -1,0 +1,191 @@
+"""Per-query Spark job floor of indexed search, and the schema memo that
+keeps repeated scans from running Spark's schema-inference job.
+
+The memo must reproduce exactly what `spark.read.parquet` infers: from
+the lexicographically smallest path, under the session's conversion
+flags, and never from a stale file."""
+
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pyspark.sql.functions as F
+import pytest
+
+from rottnest_spark import ParquetLake
+from rottnest_spark.core.catalog import IndexCatalog
+from rottnest_spark.core.refine import collect_candidates_bounded
+from rottnest_spark.indices.exact import ExactIndex
+from rottnest_spark.sources.reader import scan_parquet
+
+N_ROWS = 400
+
+
+def _count_jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(spark, n, lo=0):
+    return spark.range(lo, lo + n).select(
+        F.format_string("key-%05d", "id").alias("key"),
+        (F.col("id") % 7).alias("grp"),
+        F.concat(F.lit("text "), F.col("id").cast("string")).alias("body"),
+    )
+
+
+def _key_in(spark, path):
+    return spark.read.parquet(path).select("key").limit(1).collect()[0][0]
+
+
+@pytest.fixture(scope="module")
+def warm_lake(spark, tmp_path_factory):
+    """A 2-file lake with an exact index on `key`, warmed by one hit in
+    each file and one miss."""
+    root = tmp_path_factory.mktemp("jobs")
+    data = str(root / "data")
+    _rows(spark, N_ROWS).repartition(2).write.parquet(data)
+    lake = ParquetLake(spark, data, str(root / "idx"))
+    idx = ExactIndex()
+    lake.build_index(idx, "key")
+    assert len(lake.files) == 2
+    hits = [_key_in(spark, f) for f in lake.files]
+    for q in hits + ["no-such-key"]:
+        lake.search(idx, "key", q, k=10).collect()
+    return lake, idx, hits
+
+
+def test_point_hit_runs_at_most_two_jobs(spark, warm_lake):
+    lake, idx, hits = warm_lake
+    for i, q in enumerate(hits):
+        rows = []
+        n = _count_jobs(
+            spark,
+            f"jobs-hit-{i}",
+            lambda: rows.extend(lake.search(idx, "key", q, k=10).collect()),
+        )
+        assert [r["key"] for r in rows] == [q]
+        assert n <= 2, f"point hit ran {n} jobs"
+
+
+def test_point_miss_runs_at_most_one_job(spark, warm_lake):
+    lake, idx, _ = warm_lake
+    rows = []
+    n = _count_jobs(
+        spark,
+        "jobs-miss",
+        lambda: rows.extend(lake.search(idx, "key", "key-99999", k=10).collect()),
+    )
+    assert rows == []
+    assert n <= 1, f"point miss ran {n} jobs"
+
+
+def _write(path, table):
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    pq.write_table(table, path)
+    return path
+
+
+def test_mixed_schema_list_matches_spark_in_both_orders(spark, tmp_path):
+    narrow = _write(
+        str(tmp_path / "a_narrow.parquet"), pa.table({"x": pa.array([1, 2])})
+    )
+    wide = _write(
+        str(tmp_path / "z_wide.parquet"),
+        pa.table({"x": pa.array([3]), "y": pa.array(["w"])}),
+    )
+    for order in ([wide, narrow], [narrow, wide]):
+        want = spark.read.parquet(*order).schema
+        # first call fills the memo, the second is served from it
+        assert scan_parquet(spark, *order).schema == want
+        assert scan_parquet(spark, *order).schema == want
+    # a memo entry made by the wide file alone is not the list's schema
+    assert scan_parquet(spark, wide).schema == spark.read.parquet(wide).schema
+    got = scan_parquet(spark, wide, narrow)
+    assert got.schema == spark.read.parquet(wide, narrow).schema
+    assert sorted(r["x"] for r in got.collect()) == [1, 2, 3]
+
+
+def test_file_rewritten_in_place_never_gets_old_schema(spark, tmp_path):
+    path = str(tmp_path / "f.parquet")
+    _write(path, pa.table({"a": pa.array([1, 2, 3])}))
+    old = scan_parquet(spark, path).schema
+    assert scan_parquet(spark, path).schema == old
+    _write(path, pa.table({"b": pa.array(["x"]), "c": pa.array([1.5])}))
+    want = spark.read.parquet(path).schema
+    assert want != old
+    got = scan_parquet(spark, path)
+    assert got.schema == want
+    assert [tuple(r) for r in got.collect()] == [("x", 1.5)]
+
+
+def test_binary_as_string_flip_changes_schema_like_spark(spark, tmp_path):
+    path = _write(
+        str(tmp_path / "bin.parquet"), pa.table({"b": pa.array([b"ab"])})
+    )
+    flag = "spark.sql.parquet.binaryAsString"
+    prior = spark.conf.get(flag, None)
+    try:
+        schemas = []
+        for value in ("false", "true", "false"):
+            spark.conf.set(flag, value)
+            want = spark.read.parquet(path).schema
+            assert scan_parquet(spark, path).schema == want
+            assert scan_parquet(spark, path).schema == want
+            schemas.append(want["b"].dataType.typeName())
+        assert schemas == ["binary", "string", "binary"]
+    finally:
+        if prior is None:
+            spark.conf.unset(flag)
+        else:
+            spark.conf.set(flag, prior)
+
+
+def test_duplicate_row_group_units_return_no_duplicate_rows(spark, tmp_path):
+    """A lost commit_build race leaves two entries whose index data both
+    cover one file; the probe then names its units twice."""
+    data = str(tmp_path / "data")
+    _rows(spark, N_ROWS // 2).coalesce(1).write.parquet(data)
+    lake = ParquetLake(spark, data, str(tmp_path / "idx"))
+    idx = ExactIndex(granularity="row_group")
+    lake.build_index(idx, "grp")
+    first = lake.files
+    lake.append(_rows(spark, N_ROWS // 2, lo=N_ROWS // 2).coalesce(1))
+    files = lake.files
+    # the losing build indexed both files; only the new one commits
+    late = os.path.join(lake.index_dir, "exact_grp_late")
+    idx.build(spark, files, "grp", late)
+    committed = lake.catalog.commit_build(
+        {
+            "index_name": "exact_grp_late",
+            "index_type": "exact",
+            "column_name": "grp",
+            "index_path": late,
+            "file_paths": files,
+            "record_counts": [N_ROWS // 2] * len(files),
+            "config": IndexCatalog.config_json(**idx.config()),
+        }
+    )
+    assert committed == [f for f in files if f not in first]
+
+    paths = [e["index_path"] for e in lake.catalog.entries_for("exact", "grp")]
+    cands = idx.search(spark, paths, 3)
+    units = [(r["file_path"], r["row_group"]) for r in cands.collect()]
+    assert len(units) > len(set(units)), "the race left no repeated unit"
+    got_units = collect_candidates_bounded(
+        cands, set(files), set(files), lake.brute_force_threshold
+    )
+    assert sorted(got_units) == sorted(set(units))
+
+    scan = lake.read().filter(F.col("grp") == 3)
+    want = sorted(tuple(r) for r in scan.collect())
+    got = sorted(tuple(r) for r in lake.search(idx, "grp", 3).collect())
+    assert got == want and len(set(got)) == len(got)
+    k = 5
+    limited = [tuple(r) for r in lake.search(idx, "grp", 3, k=k).collect()]
+    assert len(limited) == k and set(limited) <= set(want)
