@@ -257,11 +257,16 @@ class ParquetLake:
         if len(groups) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
+            from pyspark.util import inheritable_thread_target
+
             workers = min(len(groups), int(
                 os.environ.get("ROTTNEST_BUILD_GROUP_PARALLELISM", "3")
             ))
+            # group chains inherit the caller's job group, so a timeout's
+            # cancelJobGroup reaches them
+            run_group = inheritable_thread_target(self.spark)(build_group)
             with ThreadPoolExecutor(max_workers=workers) as pool:
-                results = list(pool.map(build_group, groups))
+                results = list(pool.map(run_group, groups))
         else:
             results = [build_group(g) for g in groups]
         created = [r for r in results if r]
@@ -351,25 +356,11 @@ class ParquetLake:
         parts: list[DataFrame] = []
 
         if plan.entries:
-            paths = [e["index_path"] for e in plan.entries]
-            cands = index.search(self.spark, paths, query)
-            if cands is BRUTE_FORCE:
+            cand_list = self._probe_units(index, plan, query)
+            if cand_list is None or cand_list is BRUTE_FORCE:
                 parts.append(self.read(plan.covered_files))
-            else:
-                # Bounded collect: learn "over threshold" from at most
-                # threshold+1 rows, never the full candidate list.
-                cand_list = collect_candidates_bounded(
-                    cands,
-                    {f for e in plan.entries for f in e["file_paths"]},
-                    set(plan.covered_files),
-                    self.brute_force_threshold,
-                )
-                if cand_list is None:
-                    parts.append(self.read(plan.covered_files))
-                elif cand_list:
-                    parts.append(
-                        self._read_candidate_units(cand_list)
-                    )
+            elif cand_list:
+                parts.append(self._read_candidate_units(cand_list))
 
         if plan.unindexed_files:
             # in-situ scan of unindexed files (utils.py:248-275). With a
@@ -401,6 +392,24 @@ class ParquetLake:
         if columns:
             out = out.select(*columns)
         return out.limit(k) if k is not None else out
+
+    def _probe_units(self, index: SparkIndex, plan, query):
+        """The candidate units of `query` over the plan's entries (probed
+        on the driver when the index slice fits, `SparkIndex.probe`):
+        BRUTE_FORCE when the index declares itself unselective, None when
+        more units than brute_force_threshold match — learned from at
+        most threshold+1 rows, never the full candidate list."""
+        cands = index.probe(
+            self.spark, [e["index_path"] for e in plan.entries], query
+        )
+        if cands is BRUTE_FORCE:
+            return cands
+        return collect_candidates_bounded(
+            cands,
+            {f for e in plan.entries for f in e["file_paths"]},
+            set(plan.covered_files),
+            self.brute_force_threshold,
+        )
 
     #: files per early-stop in-situ batch — one batch is one Spark job;
     #: larger = fewer jobs on sparse queries, smaller = tighter open bound
@@ -862,21 +871,17 @@ class ParquetLake:
         }
         if not plan.entries:
             return out
-        cands = index.search(
-            self.spark, [e["index_path"] for e in plan.entries], query
-        )
-        if cands is BRUTE_FORCE:
+        # the probe and bounded collect search() runs, so the counts are
+        # the units search() fetches (stale entries dropped, de-duplicated)
+        cand_list = self._probe_units(index, plan, query)
+        if cand_list is BRUTE_FORCE:
             out["decision"] = "brute_force_flag"
             return out
-        from pyspark.sql import functions as F
-
-        # one aggregate — never materializes the candidate list driver-side
-        stat = cands.agg(
-            F.count("*").alias("n"),
-            F.max((F.col("row_group") != WHOLE_FILE).cast("int")).alias("has_rg"),
-        ).collect()[0]
-        n = stat["n"]
-        if stat["has_rg"]:
+        if cand_list is None:
+            out["decision"] = "brute_force_threshold"
+            return out
+        n = len(cand_list)
+        if any(rg != WHOLE_FILE for _, rg in cand_list):
             from rottnest_spark.core.layout import extract_layout
 
             total = extract_layout(self.spark, plan.covered_files).count()
@@ -885,11 +890,7 @@ class ParquetLake:
         out["n_candidates"] = n
         out["total_units"] = total
         out["pruning_ratio"] = round(n / total, 4) if total else None
-        out["decision"] = (
-            "brute_force_threshold"
-            if n > self.brute_force_threshold
-            else "index_scan"
-        )
+        out["decision"] = "index_scan" if n else "empty"
         return out
 
     # -- summary estimates ----------------------------------------------------

@@ -46,12 +46,15 @@ def _us_schema(arrow_schema):
 
 
 def collect_candidates_bounded(
-    cands: DataFrame,
+    cands: DataFrame | list[tuple[str, int]],
     entry_files: set[str],
     covered: set[str],
     threshold: int | None,
 ) -> list[tuple[str, int]] | None:
     """Collect candidate units with a hard driver-side bound.
+
+    `cands` is a probe's DataFrame, or the unit list of a probe that ran
+    on the driver (`SparkIndex.probe`); one rule serves both.
 
     Returns the unit list, or None when it exceeds `threshold` — the caller
     then falls back to a full scan WITHOUT ever materializing the oversized
@@ -60,33 +63,37 @@ def collect_candidates_bounded(
     reference brute_force_threshold analog backends/utils.py:224-225).
 
     Stale-entry liveness (index entries can reference files since deleted
-    from the lake) is pushed into Spark as a broadcast semi-join, and only
-    when staleness is actually possible — filtering driver-side after a
-    LIMIT would silently drop live candidates.
+    from the lake) is applied only when staleness is actually possible;
+    for a DataFrame it is pushed into Spark as a broadcast semi-join —
+    filtering driver-side after a LIMIT would silently drop live
+    candidates.
 
     Units are de-duplicated here, on at most threshold+1 rows, so a probe
     needs no `.distinct()` shuffle. A unit repeats only when two catalog
     entries cover one file (a lost `commit_build` race); the repeats then
     count toward the threshold, which only makes the fallback come
     sooner."""
-    from pyspark.sql import functions as F
-
-    if entry_files - covered:
-        from rottnest_spark.core.smalldf import local_df
-
-        covered_df = local_df(
-            cands.sparkSession,
-            [(f,) for f in sorted(covered)],
-            "file_path string",
-        )
-        cands = cands.join(F.broadcast(covered_df), "file_path", "semi")
-    if threshold is None:
-        rows = cands.collect()
+    stale = bool(entry_files - covered)
+    if isinstance(cands, list):
+        units = [u for u in cands if u[0] in covered] if stale else cands
     else:
-        rows = cands.limit(threshold + 1).collect()
-        if len(rows) > threshold:
-            return None
-    return list(dict.fromkeys((r["file_path"], r["row_group"]) for r in rows))
+        from pyspark.sql import functions as F
+
+        if stale:
+            from rottnest_spark.core.smalldf import local_df
+
+            covered_df = local_df(
+                cands.sparkSession,
+                [(f,) for f in sorted(covered)],
+                "file_path string",
+            )
+            cands = cands.join(F.broadcast(covered_df), "file_path", "semi")
+        if threshold is not None:
+            cands = cands.limit(threshold + 1)
+        units = [(r["file_path"], r["row_group"]) for r in cands.collect()]
+    if threshold is not None and len(units) > threshold:
+        return None
+    return list(dict.fromkeys(units))
 
 
 def read_candidates(

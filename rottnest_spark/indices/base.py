@@ -58,6 +58,20 @@ class SparkIndex(ABC):
         """Return candidates DataFrame[file_path, row_group] (row_group == -1
         means whole file), or BRUTE_FORCE."""
 
+    def search_local(self, spark: SparkSession, index_paths: list[str], query):
+        """Driver-side twin of search() over footer-pruned pyarrow slices
+        of the index tables (`sources.reader.read_index_slice`): the unit
+        list, BRUTE_FORCE, or None when this probe must run on Spark (no
+        driver implementation, slice over budget, unreadable path)."""
+        return None
+
+    def probe(self, spark: SparkSession, index_paths: list[str], query):
+        """Candidates for `query`: search_local()'s unit list when the
+        probe ran on the driver, else search()'s DataFrame; BRUTE_FORCE
+        either way. `core.refine.collect_candidates_bounded` takes both."""
+        local = self.search_local(spark, index_paths, query)
+        return self.search(spark, index_paths, query) if local is None else local
+
     @abstractmethod
     def brute_force(
         self, df: DataFrame, column: str, query, k: int | None

@@ -161,7 +161,11 @@ class BM25Index(SparkIndex):
         # jobs so each one's stage tail back-fills the others (guide §2.6)
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark.util import inheritable_thread_target
+
         pool = ThreadPoolExecutor(max_workers=3)
+        # chains inherit the caller's job group (cancellation reaches them)
+        write = inheritable_thread_target(spark)(self._write_index)
         try:
             per_row = rows.select(
                 "file_path",
@@ -170,14 +174,14 @@ class BM25Index(SparkIndex):
             )
             postings = per_row.select("token", "file_path", "row_group").distinct()
             fut_postings = pool.submit(
-                self._write_index,
+                write,
                 postings,
                 f"{out_path}/postings",
                 sort_cols=["token"],
             )
             stats = per_row.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
             fut_stats = pool.submit(
-                self._write_index,
+                write,
                 stats,
                 f"{out_path}/stats",
                 sort_cols=["token"],
@@ -211,6 +215,67 @@ class BM25Index(SparkIndex):
             postings.filter(F.col("token").isin(list(toks)))
             .select("file_path", "row_group")
             .distinct()
+        )
+
+    def search_local(self, spark: SparkSession, index_paths: list[str], query):
+        return self.search_tokens_local(
+            index_paths, self.tokenizer.query_tokens(query)
+        )
+
+    def search_tokens_local(self, index_paths: list[str], toks: list[str]):
+        """search_tokens() over the footer-pruned postings slice: the unit
+        list, or None when the probe must run on Spark."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from rottnest_spark.sources.reader import read_index_slice
+
+        if not toks:
+            return []
+        parts = read_index_slice(
+            [f"{p}/postings" for p in index_paths],
+            "token",
+            toks,
+            ["token", "file_path", "row_group"],
+        )
+        if parts is None:
+            return None
+        tbl = pa.concat_tables(parts)
+        hit = tbl.filter(pc.is_in(tbl["token"], value_set=pa.array(list(toks))))
+        return list(
+            dict.fromkeys(
+                zip(hit["file_path"].to_pylist(), hit["row_group"].to_pylist())
+            )
+        )
+
+    def stats_local(self, index_paths: list[str], query_tokens):
+        """stats() over footer-pruned slices of the stats and meta tables:
+        ({token: df}, n_docs, total_len), or None when over budget."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from rottnest_spark.sources.reader import read_index_slice
+
+        toks = list(query_tokens)
+        st = read_index_slice(
+            [f"{p}/stats" for p in index_paths], "token", toks, ["token", "df"]
+        )
+        meta = read_index_slice(
+            [f"{p}/meta" for p in index_paths], None, None, ["n_docs", "total_len"]
+        )
+        if st is None or meta is None:
+            return None
+        dfs: dict[str, int] = {}
+        if toks:
+            tbl = pa.concat_tables(st)
+            tbl = tbl.filter(pc.is_in(tbl["token"], value_set=pa.array(toks)))
+            for t, d in zip(tbl["token"].to_pylist(), tbl["df"].to_pylist()):
+                dfs[t] = dfs.get(t, 0) + d
+        meta = pa.concat_tables(meta)
+        return (
+            dfs,
+            sum(filter(None, meta["n_docs"].to_pylist())),
+            sum(filter(None, meta["total_len"].to_pylist())),
         )
 
     def stats(self, spark: SparkSession, index_paths: list[str], query_tokens):
@@ -382,7 +447,7 @@ def score_rows(
     df: DataFrame,
     column: str,
     query_tokens: list[str],
-    stats_df: DataFrame,
+    stats_df: DataFrame | dict[str, int],
     n_docs: int,
     total_len: int,
     id_col: str,
@@ -397,21 +462,19 @@ def score_rows(
     ties broken by id_col when k is set. Rows with no query token are
     excluded (score would be 0). `weights` (X7 expansion) multiply each
     token's partial score, mirroring the reference's weighted accumulation
-    (bm25.rs:547-555)."""
-    if not query_tokens or n_docs == 0:
+    (bm25.rs:547-555).
+
+    `stats_df` is a (token, df) DataFrame, or a {token: df} dict from a
+    driver-side probe, which becomes a literal map: no join, no job."""
+    if not query_tokens or n_docs == 0 or (
+        isinstance(stats_df, dict) and not stats_df
+    ):
         return df.select(id_col).limit(0).withColumn("score", F.lit(0.0))
     avg_len = total_len / n_docs if n_docs else 1.0
-    # idf per token — tiny; compute driver-side then broadcast-join
-    idf = F.log(
-        (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-    ).alias("idf")
-    stats_small = stats_df.select("token", idf)
-    if weights:
-        wmap = F.create_map(
-            *[F.lit(x) for kv in weights.items() for x in kv]
-        )
-        stats_small = stats_small.withColumn(
-            "idf", F.col("idf") * F.coalesce(wmap[F.col("token")], F.lit(0.0))
+
+    def idf(df_col):
+        return F.log(
+            (F.lit(float(n_docs)) - df_col + 0.5) / (df_col + 0.5) + 1.0
         )
 
     toks = df.select(
@@ -423,7 +486,29 @@ def score_rows(
     tf = exploded.groupBy(id_col, "token", "len").agg(
         F.count(F.lit(1)).alias("tf")
     )
-    per_token = tf.join(F.broadcast(stats_small), "token").select(
+    if isinstance(stats_df, dict):
+        dfs = F.create_map(
+            *[
+                x
+                for t, d in sorted(stats_df.items())
+                for x in (F.lit(t), F.lit(int(d)).cast("long"))
+            ]
+        )
+        tf = tf.filter(F.col("token").isin(list(stats_df))).withColumn(
+            "idf", idf(dfs[F.col("token")])
+        )
+    else:
+        # idf per token — tiny; broadcast-join
+        stats_small = stats_df.select("token", idf(F.col("df")).alias("idf"))
+        tf = tf.join(F.broadcast(stats_small), "token")
+    if weights:
+        wmap = F.create_map(
+            *[F.lit(x) for kv in weights.items() for x in kv]
+        )
+        tf = tf.withColumn(
+            "idf", F.col("idf") * F.coalesce(wmap[F.col("token")], F.lit(0.0))
+        )
+    per_token = tf.select(
         id_col,
         (
             F.col("idf")
@@ -483,11 +568,17 @@ def bm25_topk(
 
     if plan.entries:
         paths = [e["index_path"] for e in plan.entries]
-        st, n, tl = index.stats(spark, paths, toks)
+        # driver-side probe when both slices fit the budget: the stats
+        # come back as a {token: df} dict, so scoring needs no stats job
+        stats = index.stats_local(paths, toks)
+        cands = None if stats is None else index.search_tokens_local(paths, toks)
+        if cands is None:
+            stats = index.stats(spark, paths, toks)
+            cands = index.search_tokens(spark, paths, toks)
+        st, n, tl = stats
         stat_parts.append(st)
         n_docs += n
         total_len += tl
-        cands = index.search_tokens(spark, paths, toks)
         from rottnest_spark.core.refine import collect_candidates_bounded
 
         cand_list = collect_candidates_bounded(
@@ -515,10 +606,21 @@ def bm25_topk(
         empty = lake.read(lake.files[:1]).limit(0)
         return empty.select(id_col).withColumn("score", F.lit(0.0))
 
-    stats_df = stat_parts[0]
-    for s in stat_parts[1:]:
-        stats_df = stats_df.unionByName(s)
-    stats_df = stats_df.groupBy("token").agg(F.sum("df").alias("df"))
+    if len(stat_parts) == 1 and isinstance(stat_parts[0], dict):
+        stats_df = stat_parts[0]
+    else:
+        from rottnest_spark.core.smalldf import local_df
+
+        frames = [
+            local_df(spark, sorted(s.items()), "token string, df long", slices=1)
+            if isinstance(s, dict)
+            else s
+            for s in stat_parts
+        ]
+        stats_df = frames[0]
+        for s in frames[1:]:
+            stats_df = stats_df.unionByName(s)
+        stats_df = stats_df.groupBy("token").agg(F.sum("df").alias("df"))
 
     rows = cand_parts[0]
     for c in cand_parts[1:]:

@@ -98,9 +98,15 @@ class ExactIndex(SparkIndex):
         # same on-disk source — run them as concurrent jobs (guide §2.6)
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark.util import inheritable_thread_target
+
         with ThreadPoolExecutor(max_workers=1) as pool:
+            # the chain inherits the caller's job group, so a timeout's
+            # cancelJobGroup reaches it
             fut_zone = pool.submit(
-                self._write_index, zone, f"{out_path}/zone"
+                inheritable_thread_target(spark)(self._write_index),
+                zone,
+                f"{out_path}/zone",
             )
             # per-(key, unit) row COUNTS make the key table a covering
             # index: count-style queries are answered from the index alone
@@ -137,6 +143,40 @@ class ExactIndex(SparkIndex):
         return zones.filter(
             (F.col("min_key") <= F.lit(query)) & (F.col("max_key") >= F.lit(query))
         ).select("file_path", "row_group")
+
+    def search_local(self, spark: SparkSession, index_paths: list[str], query):
+        """`key == q` over the footer-pruned key-table slice. Only str and
+        int keys against string and integer key columns, where Arrow's
+        equality is Spark's; any other probe takes the Spark path."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from rottnest_spark.sources.reader import read_index_slice
+
+        query = _hex_query(query)
+        if not self.store_keys or type(query) not in (str, int):
+            return None
+        if type(query) is int and not -(2**63) <= query < 2**63:
+            return None
+        parts = read_index_slice(
+            [f"{p}/keys" for p in index_paths],
+            "key",
+            [query],
+            ["key", "file_path", "row_group"],
+        )
+        if parts is None:
+            return None
+        is_str = type(query) is str
+        units = []
+        for t in parts:
+            typ = t.schema.field("key").type
+            if not (pa.types.is_string(typ) if is_str else pa.types.is_integer(typ)):
+                return None
+            hit = t.filter(pc.equal(t["key"], pa.scalar(query)))
+            units += zip(
+                hit["file_path"].to_pylist(), hit["row_group"].to_pylist()
+            )
+        return units
 
     def count_key(
         self, spark: SparkSession, index_paths: list[str], query,
@@ -250,6 +290,9 @@ class PrefixSearch(ExactIndex):
     #: past any character that can follow a prefix in UTF-8 collation
     #: (kept for virtual-path callers that need a coarse range seed)
     _HI = "\U0010ffff"
+
+    # the prefix probe reads the zone table, on Spark
+    search_local = SparkIndex.search_local
 
     def search(self, spark: SparkSession, index_paths: list[str], query):
         query = _hex_query(query)

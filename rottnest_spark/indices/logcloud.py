@@ -151,14 +151,14 @@ class LogIndex(SparkIndex):
         # as concurrent jobs so each chain's stage tails back-fill the
         # others' idle executors (guide §2.6). Writes land in disjoint
         # subdirs; a failure in any chain propagates from result().
-        # LIMITATION (r11 ADVICE): jobs submitted from plain pool threads
-        # do not inherit Spark local properties (job group/description,
-        # scheduler pool), so a caller's setJobGroup cancellation will not
-        # cover the pooled chains; use pyspark.InheritableThread semantics
-        # if group cancellation ever matters here.
+        # The chains inherit the caller's Spark local properties (job
+        # group, description), so a setJobGroup cancellation covers them.
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark.util import inheritable_thread_target
+
         pool = ThreadPoolExecutor(max_workers=3)
+        write = inheritable_thread_target(spark)(self._write_index)
         try:
             templates = (
                 rows.select(
@@ -168,7 +168,7 @@ class LogIndex(SparkIndex):
                 .agg(F.count(F.lit(1)).alias("n"))
             )
             fut_templates = pool.submit(
-                self._write_index, templates, f"{out_path}/templates"
+                write, templates, f"{out_path}/templates"
             )
             # pin the distinct (value, unit) table ONCE: five derived
             # outputs (dict, variables, gramtypes, valgrams + the range
@@ -214,7 +214,7 @@ class LogIndex(SparkIndex):
                 "vtype", "value"
             )
             fut_dict = pool.submit(
-                self._write_index,
+                write,
                 dict_vals,
                 f"{out_path}/dict",
                 sort_cols=["value"],
@@ -232,7 +232,7 @@ class LogIndex(SparkIndex):
                 "left_anti",
             )
             fut_vars = pool.submit(
-                self._write_index,
+                write,
                 variables,
                 f"{out_path}/variables",
                 sort_cols=["vtype", "value"],

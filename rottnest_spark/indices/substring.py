@@ -489,15 +489,15 @@ class SubstringIndex(SparkIndex):
         df_rows = (
             idx.filter(F.col("gram").isin(grams)).groupBy("gram").count().collect()
         )
-        gram_df = {r["gram"]: r["count"] for r in df_rows}
-        if len(gram_df) < len(grams):
-            # some query gram occurs in no indexed unit → provably no hits
+        probe = self.probe_grams(
+            grams,
+            {r["gram"]: r["count"] for r in df_rows},
+            lambda: self.read_unit_meta(spark, index_paths),
+        )
+        if probe is BRUTE_FORCE:
+            return BRUTE_FORCE
+        if not probe:
             return spark.createDataFrame([], "file_path string, row_group int")
-        probe = sorted(grams, key=lambda g: gram_df[g])[: self.max_query_grams]
-        if self.unselective_frac is not None:
-            n_units = self.read_unit_meta(spark, index_paths)
-            if n_units and gram_df[probe[0]] >= self.unselective_frac * n_units:
-                return BRUTE_FORCE
         # a row count needs one exchange where count_distinct needs two;
         # (gram, unit) is unique within an entry, so only a unit repeated
         # across entries can pass with a gram missing, and the refine
@@ -508,6 +508,62 @@ class SubstringIndex(SparkIndex):
             .count()
             .filter(F.col("count") >= len(probe))
             .select("file_path", "row_group")
+        )
+
+    def probe_grams(self, grams: list[str], gram_df: dict, n_units):
+        """The gram selection every substring probe shares, given each
+        query gram's unit count (`gram_df`; an absent gram is in no unit)
+        and a thunk for the indexed unit total:
+
+        * [] when a gram occurs in no indexed unit — no unit can contain
+          the query (absence proof);
+        * BRUTE_FORCE when even the rarest gram is in ≥ unselective_frac
+          of all units — the probe cannot prune;
+        * else the `max_query_grams` rarest grams, rarest first."""
+        if any(g not in gram_df for g in grams):
+            return []
+        probe = sorted(grams, key=lambda g: gram_df[g])[: self.max_query_grams]
+        if self.unselective_frac is not None:
+            total = n_units()
+            if total and gram_df[probe[0]] >= self.unselective_frac * total:
+                return BRUTE_FORCE
+        return probe
+
+    def search_local(self, spark: SparkSession, index_paths: list[str], query):
+        """search()'s two passes over the footer-pruned gram-table slice:
+        every row of a query gram lies in a row group whose min/max spans
+        it, so the slice's per-gram counts are the df pass's counts."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from rottnest_spark.sources.reader import read_index_slice
+
+        grams = self.query_grams(query)
+        if not grams:
+            return BRUTE_FORCE
+        parts = read_index_slice(
+            index_paths, "gram", grams, ["gram", "file_path", "row_group"]
+        )
+        if parts is None:
+            return None
+        tbl = pa.concat_tables(parts)
+        tbl = tbl.filter(pc.is_in(tbl["gram"], value_set=pa.array(grams)))
+        counts = pc.value_counts(tbl["gram"]).to_pylist()
+        probe = self.probe_grams(
+            grams,
+            {c["values"]: c["counts"] for c in counts},
+            lambda: self.read_unit_meta(spark, index_paths),
+        )
+        if probe is BRUTE_FORCE or not probe:
+            return probe
+        hits = (
+            tbl.filter(pc.is_in(tbl["gram"], value_set=pa.array(probe)))
+            .group_by(["file_path", "row_group"])
+            .aggregate([("gram", "count")])
+        )
+        hits = hits.filter(pc.greater_equal(hits["gram_count"], len(probe)))
+        return list(
+            zip(hits["file_path"].to_pylist(), hits["row_group"].to_pylist())
         )
 
     def search_many(
@@ -533,28 +589,23 @@ class SubstringIndex(SparkIndex):
             .collect()
         )
         gram_df = {r["gram"]: r["count"] for r in df_rows}
-        n_units = (
-            self.read_unit_meta(spark, index_paths)
-            if self.unselective_frac is not None
-            else None
-        )
+        n_units: list[int] = []  # read once, on the first query that asks
+
+        def units() -> int:
+            if not n_units:
+                n_units.append(self.read_unit_meta(spark, index_paths))
+            return n_units[0]
+
         empty = spark.createDataFrame([], "file_path string, row_group int")
         probes: dict[str, list[str]] = {}
         for q, grams in batched.items():
-            if any(g not in gram_df for g in grams):
-                out[q] = empty  # absence proof, per-query
-                continue
-            probe = sorted(grams, key=lambda g: gram_df[g])[
-                : self.max_query_grams
-            ]
-            if (
-                self.unselective_frac is not None
-                and n_units
-                and gram_df[probe[0]] >= self.unselective_frac * n_units
-            ):
+            probe = self.probe_grams(grams, gram_df, units)
+            if probe is BRUTE_FORCE:
                 out[q] = BRUTE_FORCE
-                continue
-            probes[q] = probe
+            elif not probe:
+                out[q] = empty  # absence proof, per-query
+            else:
+                probes[q] = probe
         if not probes:
             return out
         probe_union = sorted({g for gs in probes.values() for g in gs})
@@ -567,12 +618,14 @@ class SubstringIndex(SparkIndex):
             .distinct()
             .localCheckpoint(eager=True)
         )
+        # the postings are de-duplicated, so a unit's row count is its
+        # distinct probe-gram count: one exchange, not count_distinct's two
         for q, probe in probes.items():
             out[q] = (
                 postings.filter(F.col("gram").isin(probe))
                 .groupBy("file_path", "row_group")
-                .agg(F.count_distinct("gram").alias("ngrams"))
-                .filter(F.col("ngrams") == len(probe))
+                .count()
+                .filter(F.col("count") >= len(probe))
                 .select("file_path", "row_group")
             )
         return out

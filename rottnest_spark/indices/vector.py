@@ -521,6 +521,98 @@ class VectorIndex(SparkIndex):
             for r in collected
         ]
 
+    def nearest_centroids_local(
+        self, index_paths: list[str], query_vec: list[float]
+    ) -> list[tuple[str, int]] | None:
+        """nearest_centroids() over pyarrow reads of the centroid tables,
+        or None when they exceed the slice budget. Each distance is the
+        same left-to-right double sum as `_centroid_topk_df`'s
+        aggregate(zip_with(...)), ties break on the same (dist, entry,
+        centroid_id) order, and a dimension mismatch raises the same
+        ValueError."""
+        import re
+
+        import numpy as np
+
+        from rottnest_spark.sources.reader import read_index_slice
+
+        if not index_paths or self.nprobes <= 0:
+            return []
+        parts = read_index_slice(
+            [f"{p}/centroids" for p in index_paths],
+            None,
+            None,
+            ["centroid_id", "centroid"],
+        )
+        if parts is None:
+            return None
+        q = [float(v) for v in query_vec]
+        ranked, bad = [], []
+        for p, t in zip(index_paths, parts):
+            entry = re.sub("^file:/+", "/", p)
+            cids = t["centroid_id"].to_pylist()
+            vecs = t["centroid"].to_pylist()
+            # a null or short vector folds to a null distance on Spark,
+            # which sorts first and raises
+            ok = [
+                i
+                for i, v in enumerate(vecs)
+                if v is not None and len(v) == len(q) and None not in v
+            ]
+            keep = set(ok)
+            bad += [
+                (entry, cids[i], None if vecs[i] is None else len(vecs[i]))
+                for i in range(len(vecs))
+                if i not in keep
+            ]
+            if not ok:
+                continue
+            c = np.array([vecs[i] for i in ok], dtype=np.float64)
+            c = c.reshape(len(ok), len(q))
+            dist = np.zeros(len(ok))
+            for j, qj in enumerate(q):  # left to right, as the JVM fold
+                d = c[:, j] - qj
+                dist = dist + d * d
+            ranked += [(float(x), entry, cids[i], p) for x, i in zip(dist, ok)]
+        if bad:
+            raise ValueError(
+                f"query vector has dim {len(q)} but index was built "
+                f"over dim-{min(bad, key=lambda b: b[:2])[2]} embeddings"
+            )
+        ranked.sort(key=lambda r: r[:3])
+        return [(p, cid) for _, _, cid, p in ranked[: self.nprobes]]
+
+    def search_local(self, spark: SparkSession, index_paths: list[str], query_vec):
+        """The nearest centroids, then their postings, on the driver."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from rottnest_spark.sources.reader import read_index_slice
+
+        if not self.has_postings:
+            return None
+        probes = self.nearest_centroids_local(index_paths, list(query_vec))
+        if not probes:
+            return probes
+        by_path: dict[str, list[int]] = {}
+        for p, cid in probes:
+            by_path.setdefault(p, []).append(cid)
+        paths = list(by_path)
+        parts = read_index_slice(
+            [f"{p}/postings" for p in paths],
+            "centroid_id",
+            sorted({c for cids in by_path.values() for c in cids}),
+            ["centroid_id", "file_path", "row_group"],
+        )
+        if parts is None:
+            return None
+        units = []
+        for p, t in zip(paths, parts):
+            want = pa.array(by_path[p], t.schema.field("centroid_id").type)
+            hit = t.filter(pc.is_in(t["centroid_id"], value_set=want))
+            units += zip(hit["file_path"].to_pylist(), hit["row_group"].to_pylist())
+        return list(dict.fromkeys(units))
+
     def search(self, spark: SparkSession, index_paths: list[str], query_vec):
         probes = self.nearest_centroids(spark, index_paths, list(query_vec))
         if not probes:
@@ -741,7 +833,7 @@ def knn_topk(
             parts.append(lake.read(plan.unindexed_files))
     else:
         paths = [e["index_path"] for e in plan.entries]
-        cands = index.search(spark, paths, query_vec)
+        cands = index.probe(spark, paths, query_vec)
         from rottnest_spark.core.refine import collect_candidates_bounded
 
         cand_list = collect_candidates_bounded(

@@ -168,6 +168,136 @@ def scan_parquet(spark: SparkSession, *paths: str) -> DataFrame:
     return df
 
 
+# -- driver-side index slices ----------------------------------------------
+# A probe's output is metadata-scale, and index tables are sorted by their
+# probe key, so the row groups a selective probe needs are few and their
+# footer min/max name them. `read_index_slice` reads those row groups with
+# pyarrow on the driver; over `_SLICE_BUDGET` compressed bytes it declines
+# and the probe runs on Spark (docs/SCALE.md, "Driver-side probe").
+
+#: compressed bytes of index row groups one driver-side probe may read
+_SLICE_BUDGET = 32 << 20
+_FOOTERS: dict = {}
+#: footers the memo holds (cleared when full); a table with more leaves
+#: than this is probed on Spark, without reading its footers
+_FOOTERS_MAX = 4096
+_FOOTERS_LOCK = threading.Lock()
+
+
+def _table_footers(path: str) -> list | None:
+    """[(leaf file, FileMetaData)] of one index table directory, or None
+    when pyarrow cannot open it or it has more than `_FOOTERS_MAX`
+    leaves. Memoized under the schema memo's invariants: index dirs are
+    write-once and named by uuid, so the directory's identity stands for
+    its leaves and their footers."""
+    import pyarrow.parquet as pq
+
+    if not path.startswith("/") or path != os.path.normpath(path):
+        return None
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return None
+        key = (path, st.st_ino, st.st_mtime_ns)
+        hit = _FOOTERS.get(key)
+        if hit is not None:
+            return hit
+        with os.scandir(path) as it:
+            leaves = sorted(
+                e.path
+                for e in it
+                if e.is_file() and not e.name.startswith(("_", "."))
+            )
+        if not leaves or len(leaves) > _FOOTERS_MAX:
+            return None
+        footers = [(f, pq.read_metadata(f)) for f in leaves]
+    except Exception:  # OSError, or a leaf pyarrow cannot parse
+        return None
+    with _FOOTERS_LOCK:
+        if sum(map(len, _FOOTERS.values())) + len(footers) > _FOOTERS_MAX:
+            _FOOTERS.clear()
+        _FOOTERS[key] = footers
+    return footers
+
+
+def _overlaps(st, keys: list) -> bool:
+    """Whether a row group's min/max can hold one of the sorted `keys`.
+    Missing statistics are sound as 'yes'; keys incomparable with the
+    statistics raise TypeError."""
+    import bisect
+
+    if st is None or not st.has_min_max:
+        return True
+    i = bisect.bisect_left(keys, st.min)
+    return i < len(keys) and keys[i] <= st.max
+
+
+def read_index_slice(
+    paths: list[str], column: str | None, keys, columns: list[str]
+) -> list | None:
+    """The rows of each index table in `paths` whose row groups' `column`
+    min/max overlap one of `keys` (every row group when `column` is None),
+    as one pyarrow Table per path, `columns` only. None when the selected
+    row groups exceed `_SLICE_BUDGET` compressed bytes, when a path cannot
+    be opened by pyarrow, or when the keys are incomparable with the
+    column's statistics: the caller then probes on Spark. The decision
+    reads footers only, from a memo."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    keys = None if column is None else sorted(set(keys))
+    plan, budget = [], _SLICE_BUDGET
+    for path in paths:
+        footers = _table_footers(path)
+        if footers is None:
+            return None
+        parts = []
+        for f, md in footers:
+            # leaf column chunks by top-level column (a list column's leaf
+            # is `col.list.element`)
+            tops = [
+                md.schema.column(i).path.split(".")[0]
+                for i in range(md.num_columns)
+            ]
+            read = [i for i, c in enumerate(tops) if c in columns]
+            if not set(columns) <= set(tops) or (column and column not in tops):
+                return None
+            ci = None if column is None else tops.index(column)
+            rgs = []
+            for r in range(md.num_row_groups):
+                rg = md.row_group(r)
+                try:
+                    if ci is not None and not _overlaps(
+                        rg.column(ci).statistics, keys
+                    ):
+                        continue
+                except TypeError:
+                    return None
+                budget -= sum(rg.column(c).total_compressed_size for c in read)
+                if budget < 0:
+                    return None
+                rgs.append(r)
+            parts.append((f, md, rgs))
+        plan.append(parts)
+    out = []
+    try:
+        for parts in plan:
+            schema = parts[0][1].schema.to_arrow_schema()
+            tables = [
+                pq.ParquetFile(f, metadata=md).read_row_groups(rgs, columns=columns)
+                for f, md, rgs in parts
+                if rgs
+            ]
+            out.append(
+                pa.concat_tables(tables)
+                if tables
+                else pa.schema([schema.field(c) for c in columns]).empty_table()
+            )
+    except Exception:  # a leaf vanished or changed under the memo
+        return None
+    return out
+
+
 def nanos_ts_columns(file: str) -> list[str]:
     """Columns Spark cannot decode: INT64 + logical TIMESTAMP(NANOS).
 

@@ -1,0 +1,348 @@
+"""The driver-side probe (`SparkIndex.search_local`, over footer-pruned
+pyarrow slices of the index tables) against the Spark probe (`search`):
+identical unit lists and identical BRUTE_FORCE / empty / over-threshold
+decisions for the exact, substring, BM25 and vector indexes.
+
+The lake carries the cases a probe must get right: a stale entry (a data
+file deleted after it was indexed), a file covered twice (a lost
+`commit_build` race), keys on index row-group boundaries, the empty-string
+key and binary keys."""
+
+import os
+
+import pyarrow.parquet as pq
+import pyspark.sql.functions as F
+import pytest
+
+import rottnest_spark.sources.reader as reader
+from rottnest_spark import ParquetLake
+from rottnest_spark.core.catalog import IndexCatalog
+from rottnest_spark.core.planner import plan_search
+from rottnest_spark.core.refine import collect_candidates_bounded
+from rottnest_spark.indices.base import BRUTE_FORCE
+from rottnest_spark.indices.bm25 import BM25Index, bm25_topk
+from rottnest_spark.indices.exact import ExactIndex
+from rottnest_spark.indices.substring import SubstringIndex
+from rottnest_spark.indices.vector import VectorIndex, knn_topk
+
+N = 600
+K = 10
+
+
+def _rows(spark, n, lo=0):
+    i = F.col("id")
+    return spark.range(lo, lo + n).select(
+        F.when(i == 0, F.lit("")).otherwise(F.format_string("key-%05d", i)).alias("key"),
+        (i % 7).alias("grp"),
+        F.unhex(F.format_string("%08X", i * 7919)).alias("bkey"),
+        F.concat_ws(
+            " ",
+            F.lit("common"),
+            F.format_string("tok%02d", i % 40),
+            F.format_string("uniq%05dz", i),
+        ).alias("text"),
+        F.array(F.sin(i), F.cos(i), F.sin(i * 0.37)).alias("emb"),
+        i.alias("rid"),
+    )
+
+
+def _small_row_groups(spark):
+    """Index tables of a few dozen rows per row group, so probes cross
+    row-group boundaries."""
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    for k, v in (
+        ("parquet.block.size", "8192"),
+        ("parquet.block.size.row.check.min", "8"),
+        ("parquet.block.size.row.check.max", "8"),
+    ):
+        hconf.set(k, v)
+    return lambda: [
+        hconf.unset(k)
+        for k in (
+            "parquet.block.size",
+            "parquet.block.size.row.check.min",
+            "parquet.block.size.row.check.max",
+        )
+    ]
+
+
+INDEXES = {
+    "key": ExactIndex(),
+    "grp": ExactIndex(granularity="row_group"),
+    "bkey": ExactIndex(),
+    "text": SubstringIndex(granularity="row_group"),
+    "bm25": BM25Index(),
+    "emb": VectorIndex(rows_per_centroid=40, nprobes=4),
+}
+
+
+#: the indexes that also get a late entry covering one file twice
+LATE = ("key", "text", "bm25", "emb")
+
+
+def _column(name):
+    return "text" if name == "bm25" else name
+
+
+@pytest.fixture(scope="module")
+def lake(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("driver_probe")
+    data = str(root / "data")
+    _rows(spark, N).repartition(3).write.parquet(data)
+    lake = ParquetLake(spark, data, str(root / "idx"))
+    first = lake.files
+    restore = _small_row_groups(spark)
+    try:
+        for name, idx in INDEXES.items():
+            lake.build_index(idx, _column(name))
+        lake.append(_rows(spark, N // 3, lo=N).coalesce(1))
+        new = [f for f in lake.files if f not in first]
+        # a lost commit_build race: the late build indexed an already
+        # covered file too, and commits only the new one
+        for name in LATE:
+            idx = INDEXES[name]
+            late = os.path.join(lake.index_dir, f"late_{name}")
+            idx.build(spark, [first[-1]] + new, _column(name), late)
+            assert lake.catalog.commit_build(
+                {
+                    "index_name": f"late_{name}",
+                    "index_type": idx.index_type,
+                    "column_name": _column(name),
+                    "index_path": late,
+                    "file_paths": [first[-1]] + new,
+                    "record_counts": [1, 1],
+                    "config": IndexCatalog.config_json(**idx.config()),
+                }
+            ) == new
+    finally:
+        restore()
+    # a stale entry: an indexed file deleted from the lake
+    os.remove(first[0])
+    assert first[0] not in lake.files
+    return lake
+
+
+def _plan(lake, idx, column):
+    plan = plan_search(
+        lake.catalog,
+        idx.index_type,
+        column,
+        lake.files,
+        expect_config=IndexCatalog.config_json(**idx.config()),
+    )
+    assert len(plan.entries) == (2 if idx in map(INDEXES.get, LATE) else 1)
+    return plan, [e["index_path"] for e in plan.entries]
+
+
+def _units(cands):
+    if isinstance(cands, list):
+        return sorted(cands)
+    return sorted((r["file_path"], r["row_group"]) for r in cands.collect())
+
+
+def parity(spark, lake, name, query, threshold=None):
+    """Probe both ways; assert identical units and bounded-collect
+    decisions; return the driver's bounded unit list (or BRUTE_FORCE)."""
+    idx, column = INDEXES[name], _column(name)
+    plan, paths = _plan(lake, idx, column)
+    local = idx.search_local(spark, paths, query)
+    remote = idx.search(spark, paths, query)
+    assert local is not None, "the probe did not run on the driver"
+    if local is BRUTE_FORCE or remote is BRUTE_FORCE:
+        assert local is remote
+        return BRUTE_FORCE
+    assert _units(local) == _units(remote)
+    bound = (
+        {f for e in plan.entries for f in e["file_paths"]},
+        set(plan.covered_files),
+        lake.brute_force_threshold if threshold is None else threshold,
+    )
+    got = collect_candidates_bounded(local, *bound)
+    want = collect_candidates_bounded(remote, *bound)
+    assert (got is None) == (want is None)
+    if got is not None:
+        assert sorted(got) == sorted(want)
+        assert all(f in plan.covered_files for f, _ in got)
+    return got
+
+
+def _ids(df):
+    return sorted(r["rid"] for r in df.select("rid").collect())
+
+
+def _oracle(lake, column, pred):
+    return _ids(lake.read().filter(pred))
+
+
+def test_exact_parity_and_full_scan_equality(spark, lake):
+    idx = INDEXES["key"]
+    live = [r["key"] for r in lake.read().select("key").collect()]
+    queries = [live[1], live[-1], "", "key-00000", "key-99999", "key-00200"]
+    for q in queries:
+        units = parity(spark, lake, "key", q)
+        want = _oracle(lake, "key", F.col("key") == q)
+        assert _ids(lake.search(idx, "key", q)) == want
+        limited = _ids(lake.search(idx, "key", q, k=K))
+        assert len(limited) == min(K, len(want)) and set(limited) <= set(want)
+        assert (units == []) == (want == [])
+    # "" is a live key; the deleted file's keys are stale units
+    assert parity(spark, lake, "key", "") != []
+    assert parity(spark, lake, "key", "key-00000") == []
+
+
+def _boundary_keys(paths):
+    """Min and max key of every row group of the key tables, and the
+    number of row groups."""
+    keys, n_groups = set(), 0
+    for p in paths:
+        for leaf in os.listdir(f"{p}/keys"):
+            if leaf.startswith(("_", ".")):
+                continue
+            md = pq.read_metadata(f"{p}/keys/{leaf}")
+            ci = md.schema.names.index("key")
+            n_groups += md.num_row_groups
+            for r in range(md.num_row_groups):
+                st = md.row_group(r).column(ci).statistics
+                keys |= {st.min, st.max}
+    return keys, n_groups
+
+
+def test_exact_keys_on_row_group_boundaries(spark, lake):
+    for name in ("key", "grp"):
+        _, paths = _plan(lake, INDEXES[name], name)
+        keys, n_groups = _boundary_keys(paths)
+        if name == "key":
+            assert n_groups > len(paths), "key tables have one row group each"
+        for q in sorted(keys)[:12]:
+            parity(spark, lake, name, q)
+    # a low-cardinality key spans row groups, units repeat across entries
+    got = parity(spark, lake, "grp", 3)
+    want = _oracle(lake, "grp", F.col("grp") == 3)
+    assert _ids(lake.search(INDEXES["grp"], "grp", 3)) == want
+    assert len(got) == len(set(got)) > 1
+
+
+def test_exact_binary_keys(spark, lake):
+    idx = INDEXES["bkey"]
+    live = [bytes(r["bkey"]) for r in lake.read().select("bkey").limit(3).collect()]
+    for q in live + [b"\xff\xff\xff\xff"]:
+        parity(spark, lake, "bkey", q)
+        want = _oracle(lake, "bkey", F.col("bkey") == F.lit(q))
+        assert _ids(lake.search(idx, "bkey", q)) == want
+
+
+def test_exact_types_arrow_cannot_compare_take_spark(spark, lake):
+    idx = INDEXES["grp"]
+    _, paths = _plan(lake, idx, "grp")
+    for q in (3.0, True, None, 2**70, ("a", "b")):
+        assert idx.search_local(spark, paths, q) is None
+
+
+def test_substring_parity_and_decisions(spark, lake):
+    idx = INDEXES["text"]
+    # a rare literal, a literal in the stale file, an absent gram, shorter
+    # than the gram size, the empty string, a gram in every unit
+    assert len(parity(spark, lake, "text", "uniq00017z")) >= 1
+    parity(spark, lake, "text", "uniq00000z")  # a row of the deleted file
+    assert parity(spark, lake, "text", "qqqxyzzy") == []
+    assert parity(spark, lake, "text", "ab") is BRUTE_FORCE
+    assert parity(spark, lake, "text", "") is BRUTE_FORCE
+    assert parity(spark, lake, "text", "common") is BRUTE_FORCE
+    # over the threshold: the same None from both probes
+    assert parity(spark, lake, "text", "uniq00017z", threshold=0) is None
+    for q in ("uniq00017z", "UNIQ0062", "tok13 uniq"):
+        want = _oracle(
+            lake, "text", F.contains(F.lower("text"), F.lit(q.lower()))
+        )
+        got = _ids(lake.search(idx, "text", q))
+        assert got == want and got
+
+
+def test_substring_max_query_grams_cut(spark, lake):
+    idx = INDEXES["text"]
+    _, paths = _plan(lake, idx, "text")
+    idx.max_query_grams = 2
+    try:
+        q = "tok17 uniq00017z"
+        local = idx.search_local(spark, paths, q)
+        assert local and _units(local) == _units(idx.search(spark, paths, q))
+    finally:
+        idx.max_query_grams = 10
+
+
+def test_bm25_parity_stats_and_topk(spark, lake):
+    idx = INDEXES["bm25"]
+    _, paths = _plan(lake, idx, "text")
+    for q in ("tok05 uniq00100z", "common", "nosuchtoken", ""):
+        parity(spark, lake, "bm25", q)
+        toks = idx.tokenizer.query_tokens(q)
+        dfs, n, tl = idx.stats_local(paths, toks)
+        st, n2, tl2 = idx.stats(spark, paths, toks)
+        assert (n, tl) == (n2, tl2)
+        assert dfs == {r["token"]: r["df"] for r in st.collect()}
+    q = "tok05 uniq00100z common"
+    driver = [tuple(r) for r in bm25_topk(lake, idx, "text", q, K, "rid").collect()]
+    with _budget(0):
+        spark_rows = [
+            tuple(r) for r in bm25_topk(lake, idx, "text", q, K, "rid").collect()
+        ]
+    assert driver == spark_rows and len(driver) == K
+
+
+def test_vector_parity_and_dimension_mismatch(spark, lake):
+    idx = INDEXES["emb"]
+    _, paths = _plan(lake, idx, "emb")
+    for q in ([0.1, 0.9, -0.2], [1.0, 0.0, 0.0], [0.0, 0.0, 0.0]):
+        assert idx.nearest_centroids_local(paths, q) == idx.nearest_centroids(
+            spark, paths, q
+        )
+        assert parity(spark, lake, "emb", q)
+    for bad in ([0.1, 0.2], [0.1, 0.2, 0.3, 0.4]):
+        with pytest.raises(ValueError) as on_spark:
+            idx.nearest_centroids(spark, paths, bad)
+        with pytest.raises(ValueError) as on_driver:
+            idx.search_local(spark, paths, bad)
+        assert str(on_driver.value) == str(on_spark.value)
+    q = [0.3, -0.4, 0.5]
+    driver = [tuple(r) for r in knn_topk(lake, idx, "emb", q, K, "rid").collect()]
+    with _budget(0):
+        spark_rows = [tuple(r) for r in knn_topk(lake, idx, "emb", q, K, "rid").collect()]
+    assert driver == spark_rows and len(driver) == K
+
+
+class _budget:
+    """Set the driver probe's byte budget for a block."""
+
+    def __init__(self, n):
+        self.n = n
+
+    def __enter__(self):
+        self.old, reader._SLICE_BUDGET = reader._SLICE_BUDGET, self.n
+
+    def __exit__(self, *exc):
+        reader._SLICE_BUDGET = self.old
+
+
+def test_over_budget_takes_the_spark_path(spark, lake):
+    cases = [("key", lake.read().select("key").collect()[5]["key"]),
+             ("text", "uniq00017z"), ("bm25", "tok05"), ("emb", [0.1, 0.9, -0.2])]
+    for name, q in cases:
+        idx, column = INDEXES[name], _column(name)
+        _, paths = _plan(lake, idx, column)
+        local = idx.probe(spark, paths, q)
+        assert isinstance(local, list) and local, (name, q, idx.search_local(spark, paths, q))
+        with _budget(0):
+            assert idx.search_local(spark, paths, q) is None
+            remote = idx.probe(spark, paths, q)
+            assert not isinstance(remote, list)
+            assert _units(remote) == _units(local)
+            if name in ("key", "text"):
+                # and search() still answers exactly
+                pred = idx.predicate(column, q)
+                want = _oracle(lake, column, pred)
+                assert _ids(lake.search(idx, column, q)) == want
+
+
+def test_unreadable_index_path_takes_the_spark_path(spark, tmp_path):
+    assert reader.read_index_slice([str(tmp_path / "missing")], "k", [1], ["k"]) is None
+    assert reader.read_index_slice(["relative/path"], "k", [1], ["k"]) is None

@@ -15,7 +15,10 @@ import pytest
 from rottnest_spark import ParquetLake
 from rottnest_spark.core.catalog import IndexCatalog
 from rottnest_spark.core.refine import collect_candidates_bounded
+from rottnest_spark.indices.bm25 import BM25Index, bm25_topk
 from rottnest_spark.indices.exact import ExactIndex
+from rottnest_spark.indices.substring import SubstringIndex
+from rottnest_spark.indices.vector import VectorIndex, knn_topk
 from rottnest_spark.sources.reader import scan_parquet
 
 N_ROWS = 400
@@ -60,7 +63,7 @@ def warm_lake(spark, tmp_path_factory):
     return lake, idx, hits
 
 
-def test_point_hit_runs_at_most_two_jobs(spark, warm_lake):
+def test_point_hit_runs_at_most_one_job(spark, warm_lake):
     lake, idx, hits = warm_lake
     for i, q in enumerate(hits):
         rows = []
@@ -70,10 +73,10 @@ def test_point_hit_runs_at_most_two_jobs(spark, warm_lake):
             lambda: rows.extend(lake.search(idx, "key", q, k=10).collect()),
         )
         assert [r["key"] for r in rows] == [q]
-        assert n <= 2, f"point hit ran {n} jobs"
+        assert n <= 1, f"point hit ran {n} jobs"
 
 
-def test_point_miss_runs_at_most_one_job(spark, warm_lake):
+def test_point_miss_runs_no_job(spark, warm_lake):
     lake, idx, _ = warm_lake
     rows = []
     n = _count_jobs(
@@ -82,7 +85,77 @@ def test_point_miss_runs_at_most_one_job(spark, warm_lake):
         lambda: rows.extend(lake.search(idx, "key", "key-99999", k=10).collect()),
     )
     assert rows == []
-    assert n <= 1, f"point miss ran {n} jobs"
+    assert n == 0, f"point miss ran {n} jobs"
+
+
+@pytest.fixture(scope="module")
+def text_lake(spark, tmp_path_factory):
+    """A 2-file lake with substring, BM25 and vector indexes, warmed."""
+    root = tmp_path_factory.mktemp("jobs_text")
+    data = str(root / "data")
+    _rows(spark, N_ROWS).withColumn(
+        "emb", F.array(F.sin("grp"), F.cos(F.length("body")))
+    ).repartition(2).write.parquet(data)
+    lake = ParquetLake(spark, data, str(root / "idx"))
+    idx = {
+        "substring": (SubstringIndex(), "body"),
+        "bm25": (BM25Index(), "body"),
+        "vector": (VectorIndex(rows_per_centroid=50, nprobes=2), "emb"),
+    }
+    for index, column in idx.values():
+        lake.build_index(index, column)
+    for q in ("text 17", "text 399"):
+        lake.search(*idx["substring"], q, k=10).collect()
+    bm25_topk(lake, *idx["bm25"], "text 17", 10, "key").collect()
+    knn_topk(lake, *idx["vector"], [0.5, 0.5], 10, "key").collect()
+    return lake, idx
+
+
+def test_substring_search_runs_at_most_one_job(spark, text_lake):
+    lake, idx = text_lake
+    for i, q in enumerate(("text 123", "text 2", "no such text")):
+        rows = []
+        n = _count_jobs(
+            spark,
+            f"jobs-substring-{i}",
+            lambda: rows.extend(lake.search(*idx["substring"], q, k=10).collect()),
+        )
+        assert all(q in r["body"] for r in rows)
+        assert n <= 1, f"substring search ran {n} jobs"
+
+
+def test_top10_runs_at_most_three_jobs(spark, text_lake):
+    lake, idx = text_lake
+    for kind, run in (
+        ("bm25", lambda: bm25_topk(lake, *idx["bm25"], "text 123", 10, "key")),
+        ("vector", lambda: knn_topk(lake, *idx["vector"], [0.1, 0.9], 10, "key")),
+    ):
+        rows = []
+        n = _count_jobs(
+            spark, f"jobs-top10-{kind}", lambda: rows.extend(run().collect())
+        )
+        assert len(rows) == 10
+        assert n <= 3, f"{kind} top-10 ran {n} jobs"
+
+
+def test_pooled_build_chains_inherit_the_job_group(spark, tmp_path):
+    """The exact and BM25 builds write their tables on pool threads; those
+    jobs carry the caller's job group, so cancelling it reaches them."""
+    data = str(tmp_path / "data")
+    _rows(spark, N_ROWS // 4).coalesce(1).write.parquet(data)
+    lake = ParquetLake(spark, data, str(tmp_path / "idx"))
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    n = _count_jobs(
+        spark,
+        "jobs-build",
+        lambda: [
+            lake.build_index(ExactIndex(), "key"),
+            lake.build_index(BM25Index(), "body"),
+        ],
+    )
+    assert n > 0
+    assert set(tracker.getJobIdsForGroup(None)) == before
 
 
 def _write(path, table):
@@ -189,3 +262,55 @@ def test_duplicate_row_group_units_return_no_duplicate_rows(spark, tmp_path):
     k = 5
     limited = [tuple(r) for r in lake.search(idx, "grp", 3, k=k).collect()]
     assert len(limited) == k and set(limited) <= set(want)
+
+
+def test_explain_search_counts_what_search_fetches(spark, tmp_path):
+    """On a lake with a stale entry and a doubly covered file,
+    explain_search's n_candidates is the number of units search fetched."""
+    import rottnest_spark.core.lake as lake_mod
+
+    data = str(tmp_path / "data")
+    _rows(spark, N_ROWS // 2).repartition(2).write.parquet(data)
+    lake = ParquetLake(spark, data, str(tmp_path / "idx"))
+    idx = ExactIndex(granularity="row_group")
+    lake.build_index(idx, "grp")
+    first = lake.files
+    lake.append(_rows(spark, N_ROWS // 2, lo=N_ROWS // 2).coalesce(1))
+    files = lake.files
+    late = os.path.join(lake.index_dir, "exact_grp_late")
+    idx.build(spark, files, "grp", late)
+    lake.catalog.commit_build(
+        {
+            "index_name": "exact_grp_late",
+            "index_type": "exact",
+            "column_name": "grp",
+            "index_path": late,
+            "file_paths": files,
+            "record_counts": [1] * len(files),
+            "config": IndexCatalog.config_json(**idx.config()),
+        }
+    )
+    os.remove(first[0])  # its units are stale in both entries
+    fetched = []
+    real = lake_mod.ParquetLake._read_candidate_units
+
+    def spy(self, cand_list, columns=None):
+        fetched.append(list(cand_list))
+        return real(self, cand_list, columns)
+
+    lake_mod.ParquetLake._read_candidate_units = spy
+    try:
+        got = sorted(tuple(r) for r in lake.search(idx, "grp", 3).collect())
+    finally:
+        lake_mod.ParquetLake._read_candidate_units = real
+    assert got == sorted(
+        tuple(r) for r in lake.read().filter(F.col("grp") == 3).collect()
+    )
+    info = lake.explain_search(idx, "grp", 3)
+    assert info["decision"] == "index_scan"
+    assert info["n_candidates"] == len(fetched[0]) == len(set(fetched[0]))
+    assert all(f in lake.files for f, _ in fetched[0])
+    lake.brute_force_threshold = 1
+    over = lake.explain_search(idx, "grp", 3)
+    assert over["decision"] == "brute_force_threshold"
+    assert over["n_candidates"] is None
