@@ -319,7 +319,133 @@ class ParquetLake:
         if err:
             raise err[0]
 
-    # -- L2: search -----------------------------------------------------------
+    # -- L2: search executor --------------------------------------------------
+    # Every search entry point composes the same stages (utils.py:215-282):
+    # plan → candidate units (index probe + bounded collect) → covered-rows
+    # fetch → exact refine, with unindexed files scanned in situ.
+
+    def _plan(self, index: SparkIndex, column: str, files=None, guard=True):
+        """The search plan of `index` over `files` (default: the search
+        file universe, `_search_files()`). `guard` refuses entries built
+        under another config; vector planning skips it, because nprobes
+        and refine are probe-time knobs."""
+        return plan_search(
+            self.catalog,
+            index.index_type,
+            column,
+            self._search_files() if files is None else files,
+            expect_config=(
+                IndexCatalog.config_json(**index.config()) if guard else None
+            ),
+        )
+
+    def _bound(self, cands, plan=None):
+        """The candidate stage's result for one probe: BRUTE_FORCE when
+        the index declared itself unselective, None when more units than
+        brute_force_threshold match — learned from at most threshold+1
+        rows — else the unit list, stale entries of `plan` dropped and
+        de-duplicated."""
+        if cands is BRUTE_FORCE:
+            return cands
+        entries = plan.entries if plan is not None else []
+        return collect_candidates_bounded(
+            cands,
+            {f for e in entries for f in e["file_paths"]},
+            set(plan.covered_files) if plan is not None else set(),
+            self.brute_force_threshold,
+        )
+
+    def _probe_units(self, index: SparkIndex, plan, query):
+        """The candidate stage of one query (see `_probe_units_many`)."""
+        return self._probe_units_many(index, plan, [query])[0]
+
+    def _probe_units_many(self, index: SparkIndex, plan, queries: list) -> list:
+        """`_bound` of each query's probe over the plan's entries, [] for
+        every query when no entry covers the plan. A probe runs on the
+        driver when its index slice fits (`SparkIndex.search_local`); the
+        queries it cannot serve share one Spark `search_many` pass where
+        the index has one (point probes only — range tuples take
+        `search`), else each runs `search`."""
+        if not plan.entries:
+            return [[] for _ in queries]
+        paths = [e["index_path"] for e in plan.entries]
+        cands = [index.search_local(self.spark, paths, q) for q in queries]
+        todo = [i for i, c in enumerate(cands) if c is None]
+        if (
+            len(todo) > 1
+            and hasattr(index, "search_many")
+            and not any(isinstance(queries[i], tuple) for i in todo)
+        ):
+            by_q = index.search_many(self.spark, paths, [queries[i] for i in todo])
+            for i in todo:
+                cands[i] = by_q[queries[i]]
+        else:
+            for i in todo:
+                cands[i] = index.search(self.spark, paths, queries[i])
+        return [self._bound(c, plan) for c in cands]
+
+    def _fetch(self, units, files: list[str]) -> DataFrame | None:
+        """Rows of a candidate-stage result: all of `files` when the probe
+        could not prune (BRUTE_FORCE) or went over the threshold (None),
+        nothing for [], else the units' rows, delete state applied."""
+        if units is None or units is BRUTE_FORCE:
+            return self.read(files)
+        return self._read_candidate_units(units) if units else None
+
+    def _empty(self) -> DataFrame:
+        return self.read(self._search_files()[:1]).limit(0)
+
+    def _union(self, parts: list) -> DataFrame:
+        """The union of the frames in `parts` that are not None, or the
+        empty lake frame."""
+        parts = [p for p in parts if p is not None] or [self._empty()]
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out
+
+    def _answer(self, index, column, query, plan, units, k=None, columns=None):
+        """One query's result over `plan`: the covered rows of its
+        candidate units plus the unindexed files, refined by the index's
+        exact predicate. With a row budget k and a predicate-style index
+        the unindexed files are scanned newest-first and the scan stops
+        once k rows are found (`_insitu_topk`); top-K indexes rank
+        globally, so they take the full lazy scan."""
+        parts = [self._fetch(units, plan.covered_files)]
+        if plan.unindexed_files:
+            if k is not None and index.predicate(column, query) is not None:
+                parts.append(
+                    self._insitu_topk(plan.unindexed_files, index, column, query, k)
+                )
+            else:
+                parts.append(self.read(plan.unindexed_files))
+        out = index.brute_force(self._union(parts), column, query, None)
+        if columns:
+            out = out.select(*columns)
+        return out.limit(k) if k is not None else out
+
+    def _refuse_topk_under_deletes(self, index: SparkIndex, column: str, query):
+        if (
+            self._search_row_filter() is not None
+            and index.predicate(column, query) is None
+        ):
+            raise ValueError(
+                f"{index.index_type} has top-K semantics — its scores "
+                "depend on corpus statistics that would include "
+                "row-deleted rows; compact the merge-on-read state first "
+                "(iceberg_rewrite_deletes / delta_rewrite_deletes)"
+            )
+
+    @staticmethod
+    def _decision(units) -> str:
+        """The execution decision a candidate-stage result stands for."""
+        if units is BRUTE_FORCE:
+            return "brute_force_flag"
+        if units is None:
+            return "brute_force_threshold"
+        return "index_scan" if units else "empty"
+
+    # -- L2: search entry points ---------------------------------------------
 
     def search(
         self,
@@ -336,80 +462,10 @@ class ParquetLake:
         are a superset and the refine applies the delete state
         (`_search_row_filter`). Top-K indexes refuse — their scores
         depend on corpus statistics that would include deleted rows."""
-        if (
-            self._search_row_filter() is not None
-            and index.predicate(column, query) is None
-        ):
-            raise ValueError(
-                f"{index.index_type} has top-K semantics — its scores "
-                "depend on corpus statistics that would include "
-                "row-deleted rows; compact the merge-on-read state first "
-                "(iceberg_rewrite_deletes / delta_rewrite_deletes)"
-            )
-        plan = plan_search(
-            self.catalog,
-            index.index_type,
-            column,
-            self._search_files(),
-            expect_config=IndexCatalog.config_json(**index.config()),
-        )
-        parts: list[DataFrame] = []
-
-        if plan.entries:
-            cand_list = self._probe_units(index, plan, query)
-            if cand_list is None or cand_list is BRUTE_FORCE:
-                parts.append(self.read(plan.covered_files))
-            elif cand_list:
-                parts.append(self._read_candidate_units(cand_list))
-
-        if plan.unindexed_files:
-            # in-situ scan of unindexed files (utils.py:248-275). With a
-            # row budget k and a predicate-style index, scan newest-first
-            # file BATCHES and stop as soon as k rows are found — the
-            # reference's reverse-batch early stop
-            # (indices/logcloud_index.py:85-88): a huge unindexed tail
-            # costs opens only until the budget fills, not one open per
-            # file. Top-K indexes (BM25/vector) rank globally, so any-k
-            # early stop would be wrong for them — they take the full
-            # lazy path.
-            if k is not None and index.predicate(column, query) is not None:
-                parts.append(
-                    self._insitu_topk(
-                        plan.unindexed_files, index, column, query, k
-                    )
-                )
-            else:
-                parts.append(self.read(plan.unindexed_files))
-
-        if not parts:
-            empty = self.read(self._search_files()[:1]).limit(0)
-            return index.brute_force(empty, column, query, k)
-
-        refined = [index.brute_force(p, column, query, None) for p in parts]
-        out = refined[0]
-        for r in refined[1:]:
-            out = out.unionByName(r)
-        if columns:
-            out = out.select(*columns)
-        return out.limit(k) if k is not None else out
-
-    def _probe_units(self, index: SparkIndex, plan, query):
-        """The candidate units of `query` over the plan's entries (probed
-        on the driver when the index slice fits, `SparkIndex.probe`):
-        BRUTE_FORCE when the index declares itself unselective, None when
-        more units than brute_force_threshold match — learned from at
-        most threshold+1 rows, never the full candidate list."""
-        cands = index.probe(
-            self.spark, [e["index_path"] for e in plan.entries], query
-        )
-        if cands is BRUTE_FORCE:
-            return cands
-        return collect_candidates_bounded(
-            cands,
-            {f for e in plan.entries for f in e["file_paths"]},
-            set(plan.covered_files),
-            self.brute_force_threshold,
-        )
+        self._refuse_topk_under_deletes(index, column, query)
+        plan = self._plan(index, column)
+        units = self._probe_units(index, plan, query)
+        return self._answer(index, column, query, plan, units, k, columns)
 
     #: files per early-stop in-situ batch — one batch is one Spark job;
     #: larger = fewer jobs on sparse queries, smaller = tighter open bound
@@ -425,10 +481,12 @@ class ParquetLake:
     ) -> DataFrame:
         """Scan `files` newest-first in batches, refining each batch and
         stopping once `k` matching rows are in hand (limit semantics: ANY
-        k matches are a correct answer). Returns a local DataFrame of the
-        collected rows — row-budget-bounded by construction. Records the
-        files actually opened in `_insitu_files_scanned` (test/telemetry
-        observability for the open bound)."""
+        k matches are a correct answer; the reference's reverse-batch
+        early stop, indices/logcloud_index.py:85-88). Returns a local
+        DataFrame of the collected rows — row-budget-bounded by
+        construction. Records the files actually opened in
+        `_insitu_files_scanned` (test/telemetry observability for the
+        open bound)."""
 
         def mtime(f: str) -> float:
             try:
@@ -465,71 +523,20 @@ class ParquetLake:
         columns: list[str] | None = None,
     ) -> DataFrame:
         """Batched search: one result frame for N queries, tagged with a
-        `__query__` column; per-query rows ≡ search(query). The search
-        plan is computed once, and indexes exposing `search_many` (e.g.
-        SubstringIndex) amortize their index scans across all queries —
-        the loop below only assembles per-query candidate fetches."""
-        if (
-            self._search_row_filter() is not None
-            and queries
-            and index.predicate(column, queries[0]) is None
-        ):
-            raise ValueError(
-                f"{index.index_type} has top-K semantics — compact the "
-                "merge-on-read state first (iceberg_rewrite_deletes / "
-                "delta_rewrite_deletes)"
+        `__query__` column; per-query rows ≡ search(query). One plan and
+        one batched candidate stage serve every query (driver probes,
+        else one Spark `search_many` pass), then each query runs
+        search()'s fetch, early-stop in-situ scan and refine."""
+        if queries:
+            self._refuse_topk_under_deletes(index, column, queries[0])
+        plan = self._plan(index, column)
+        units = self._probe_units_many(index, plan, queries)
+        outs = [
+            self._answer(index, column, q, plan, u, k, columns).withColumn(
+                "__query__", F.lit(q)
             )
-        plan = plan_search(
-            self.catalog,
-            index.index_type,
-            column,
-            self._search_files(),
-            expect_config=IndexCatalog.config_json(**index.config()),
-        )
-        paths = [e["index_path"] for e in plan.entries]
-        if plan.entries and hasattr(index, "search_many"):
-            cands_by_q = index.search_many(self.spark, paths, queries)
-        elif plan.entries:
-            cands_by_q = {
-                q: index.search(self.spark, paths, q) for q in queries
-            }
-        else:
-            cands_by_q = {}
-
-        outs: list[DataFrame] = []
-        for q in queries:
-            parts: list[DataFrame] = []
-            if plan.entries:
-                cands = cands_by_q[q]
-                if cands is BRUTE_FORCE:
-                    parts.append(self.read(plan.covered_files))
-                else:
-                    cand_list = collect_candidates_bounded(
-                        cands,
-                        {f for e in plan.entries for f in e["file_paths"]},
-                        set(plan.covered_files),
-                        self.brute_force_threshold,
-                    )
-                    if cand_list is None:
-                        parts.append(self.read(plan.covered_files))
-                    elif cand_list:
-                        parts.append(
-                            self._read_candidate_units(cand_list)
-                        )
-            if plan.unindexed_files:
-                parts.append(self.read(plan.unindexed_files))
-            if not parts:
-                empty = self.read(self._search_files()[:1]).limit(0)
-                parts = [empty]
-            refined = [index.brute_force(p, column, q, None) for p in parts]
-            one = refined[0]
-            for r in refined[1:]:
-                one = one.unionByName(r)
-            if columns:
-                one = one.select(*columns)
-            if k is not None:
-                one = one.limit(k)
-            outs.append(one.withColumn("__query__", F.lit(q)))
+            for q, u in zip(queries, units)
+        ]
         out = outs[0]
         for o in outs[1:]:
             out = out.unionByName(o)
@@ -557,20 +564,14 @@ class ParquetLake:
         (X9): LogIndex on the message column ∩ ExactIndex zone maps on the
         timestamp column.
 
-        Execution shape (scale notes): every constraining spec's candidate
-        DataFrame is UNIONED with a spec tag and the per-file intersection is
-        one Spark aggregation — the per-spec probes become independent
-        subtrees of a single job (scheduled concurrently), and no per-spec
-        candidate list is ever materialized on the driver. The final unit
-        list is collected with the same bounded limit as single-index search."""
+        Execution shape (scale notes): every constraining spec's
+        candidates are UNIONED with a spec tag and the per-file
+        intersection is one Spark aggregation — never per-spec bounded
+        lists, which would turn "each spec unselective, intersection
+        selective" into a full scan. The intersected unit list is
+        collected with the same bounded limit as single-index search."""
         cand_list, _ = self._conj_candidates(specs)
-
-        if cand_list is None:
-            out = self.read(self._search_files())
-        elif not cand_list:
-            out = self.read(self._search_files()[:1]).limit(0)
-        else:
-            out = self._read_candidate_units(cand_list)
+        out = self._union([self._fetch(cand_list, self._search_files())])
         for index, column, query in specs:
             out = index.brute_force(out, column, query, None)
         # NOT-composition: exclusions cannot prune (the complement of a
@@ -606,23 +607,14 @@ class ParquetLake:
         OR-composition needs boolean-Column predicates, so every spec's
         index must be predicate-style (`SparkIndex.predicate`); top-K
         indexes (BM25, vector) cannot join a disjunction and raise. If
-        ANY spec cannot prune (no covering entries, or BRUTE_FORCE), its
-        matches could be anywhere and the whole disjunction degrades to
-        one full refine scan — still exact, and the refine applies all
-        predicates in a single pass either way.
+        ANY spec cannot prune (no covering entries, BRUTE_FORCE, or over
+        the threshold), its matches could be anywhere and the whole
+        disjunction degrades to one full refine scan — still exact, and
+        the refine applies all predicates in a single pass either way.
+        The unioned unit list is held to the same threshold.
 
-        The same bounded-collect discipline as everywhere: the unioned
-        unit list is LIMIT-checked before any driver materialization.
-
-        Execution shape: specs sharing an (index type, column, config) are
-        grouped so they share ONE plan lookup and — when the index exposes
-        `search_many` — ONE batched probe job for all their queries (the
-        common OR-of-terms case runs a single index pass, mirroring
-        `_conj_candidates`' single-job treatment). Candidate units are
-        semi-joined against the LIVE covered files before the bounded
-        collect, so index entries that still reference files replaced by
-        compact/merge/delete (routine before vacuum) can never surface
-        dead paths to the reader."""
+        Specs sharing an (index class, column, config) share ONE plan and
+        one batched candidate stage (`_probe_units_many`)."""
         preds = []
         for index, column, query in specs:
             p = index.predicate(column, query)
@@ -636,91 +628,35 @@ class ParquetLake:
         for p in preds[1:]:
             disj = disj | p
 
-        live = set(self._search_files())
-        union_cands: DataFrame | None = None
-        whole_files: set[str] = set()  # files some spec leaves uncovered
-        all_entry_files: set[str] = set()  # every file any probed entry names
-        full_scan = False
-
-        # group same-index specs: one plan + one batched probe per group
+        # by class, not index_type: PrefixSearch and RegexSearch probe
+        # the tables of ExactIndex and SubstringIndex with other semantics
         grouped: dict[tuple, tuple[SparkIndex, str, list]] = {}
         for index, column, query in specs:
-            gk = (
-                index.index_type,
-                column,
-                IndexCatalog.config_json(**index.config()),
-            )
-            if gk not in grouped:
-                grouped[gk] = (index, column, [])
-            grouped[gk][2].append(query)
+            gk = (type(index), column, IndexCatalog.config_json(**index.config()))
+            grouped.setdefault(gk, (index, column, []))[2].append(query)
 
+        wholes: set[str] = set()  # files some spec leaves uncovered
+        units: list | None = []
         for index, column, queries in grouped.values():
-            plan = plan_search(
-                self.catalog,
-                index.index_type,
-                column,
-                self._search_files(),
-                expect_config=IndexCatalog.config_json(**index.config()),
-            )
-            if not plan.entries:
-                full_scan = True
+            plan = self._plan(index, column)
+            got = self._probe_units_many(index, plan, queries)
+            if not plan.entries or any(u is None or u is BRUTE_FORCE for u in got):
+                units = None
                 break
-            paths = [e["index_path"] for e in plan.entries]
-            # search_many handles point probes only — tuple (range)
-            # queries keep the per-query search path
-            if (
-                len(queries) > 1
-                and hasattr(index, "search_many")
-                and not any(isinstance(q, tuple) for q in queries)
-            ):
-                by_q = index.search_many(self.spark, paths, queries)
-                cand_frames = [by_q[q] for q in queries]
-            else:
-                cand_frames = [
-                    index.search(self.spark, paths, q) for q in queries
-                ]
-            if any(c is BRUTE_FORCE for c in cand_frames):
-                full_scan = True
-                break
-            all_entry_files |= {
-                f for e in plan.entries for f in e["file_paths"]
-            }
-            whole_files |= live - set(plan.covered_files)
-            for c in cand_frames:
-                union_cands = (
-                    c if union_cands is None else union_cands.unionByName(c)
-                )
-
-        if full_scan:
-            out = self.read(self._search_files())
-        else:
-            # liveness: entries may cover files already replaced by a
-            # rewrite — semi-join candidates against live covered files,
-            # matching search() (collect_candidates_bounded triggers the
-            # join exactly when all_entry_files ⊋ covered)
-            cand_list = collect_candidates_bounded(
-                union_cands.distinct(),
-                all_entry_files,
-                live - whole_files,
-                self.brute_force_threshold,
-            )
-            if cand_list is None:
-                out = self.read(self._search_files())
-            else:
-                # whole-file admissions dominate row-group units of the
-                # same file (reading both would duplicate rows)
-                wholes = set(whole_files) | {
-                    f for f, rg in cand_list if rg == WHOLE_FILE
-                }
-                units = [(f, WHOLE_FILE) for f in sorted(wholes)] + [
-                    (f, rg)
-                    for f, rg in cand_list
-                    if rg != WHOLE_FILE and f not in wholes
-                ]
-                if units:
-                    out = self._read_candidate_units(units)
-                else:
-                    out = self.read(self._search_files()[:1]).limit(0)
+            wholes |= set(plan.unindexed_files)
+            units += [u for us in got for u in us]
+        if units is not None:
+            units = list(dict.fromkeys(units))
+            if len(units) > self.brute_force_threshold:
+                units = None
+        if units is not None:
+            # whole-file admissions dominate row-group units of the same
+            # file (reading both would duplicate rows)
+            wholes |= {f for f, rg in units if rg == WHOLE_FILE}
+            units = [(f, WHOLE_FILE) for f in sorted(wholes)] + [
+                (f, rg) for f, rg in units if f not in wholes
+            ]
+        out = self._union([self._fetch(units, self._search_files())])
         out = out.filter(disj)
         if columns:
             out = out.select(*columns)
@@ -734,15 +670,8 @@ class ParquetLake:
         all constraints, the intersected candidate count, and the final
         execution decision."""
         cand_list, diag = self._conj_candidates(specs)
-        if cand_list is None:
-            diag["decision"] = "brute_force_threshold"
-            diag["n_candidates"] = None
-        elif not cand_list:
-            diag["decision"] = "empty"
-            diag["n_candidates"] = 0
-        else:
-            diag["decision"] = "index_scan"
-            diag["n_candidates"] = len(cand_list)
+        diag["decision"] = self._decision(cand_list)
+        diag["n_candidates"] = None if cand_list is None else len(cand_list)
         return diag
 
     def _conj_candidates(
@@ -750,25 +679,23 @@ class ParquetLake:
     ) -> tuple[list[tuple[str, int]] | None, dict]:
         """Shared candidate computation for search_conj/explain_search_conj:
         (unit list | None when over threshold, diagnostics dict)."""
-        from pyspark.sql import functions as F
+        from rottnest_spark.core.smalldf import local_df
 
         # probe each spec; keep only the constraining ones
         constraining: list[tuple[set[str], DataFrame]] = []
         for index, column, query in specs:
-            plan = plan_search(
-                self.catalog,
-                index.index_type,
-                column,
-                self._search_files(),
-                expect_config=IndexCatalog.config_json(**index.config()),
-            )
+            plan = self._plan(index, column)
             if not plan.entries:
                 continue
-            cands = index.search(
+            cands = index.probe(
                 self.spark, [e["index_path"] for e in plan.entries], query
             )
             if cands is BRUTE_FORCE:
                 continue
+            if isinstance(cands, list):  # probed on the driver
+                cands = local_df(
+                    self.spark, cands, "file_path string, row_group int", slices=1
+                )
             constraining.append((set(plan.covered_files), cands))
 
         # files no spec constrains are scanned whole (metadata-scale list)
@@ -787,8 +714,6 @@ class ParquetLake:
                     "file_path", "row_group", F.lit(i).alias("spec")
                 )
                 tagged = t if tagged is None else tagged.unionByName(t)
-            from rottnest_spark.core.smalldf import local_df
-
             k_df = F.broadcast(
                 local_df(
                     self.spark,
@@ -832,12 +757,9 @@ class ParquetLake:
                 .filter(F.col("n_present") == F.col("n_nonwild"))
                 .select("file_path", "row_group")
             )
-            inter = whole.unionByName(rg_rows)
-            rows = inter.limit(self.brute_force_threshold + 1).collect()
-            if len(rows) > self.brute_force_threshold:
-                cand_list = None  # unselective → scan everything live
-            else:
-                cand_list.extend((r["file_path"], r["row_group"]) for r in rows)
+            inter = self._bound(whole.unionByName(rg_rows))
+            # unselective → scan everything live
+            cand_list = None if inter is None else cand_list + inter
 
         diag = {
             "n_specs": len(specs),
@@ -850,14 +772,9 @@ class ParquetLake:
     def explain_search(self, index: SparkIndex, column: str, query) -> dict:
         """Structured plan introspection (the reference prints its tier
         decisions at search time; this returns them): coverage split,
-        candidate count, pruning ratio, and the execution decision."""
-        plan = plan_search(
-            self.catalog,
-            index.index_type,
-            column,
-            self._search_files(),
-            expect_config=IndexCatalog.config_json(**index.config()),
-        )
+        candidate count, pruning ratio, and the decision of the candidate
+        stage search() runs — so the counts are the units it fetches."""
+        plan = self._plan(index, column)
         out = {
             "index_type": index.index_type,
             "column": column,
@@ -871,17 +788,12 @@ class ParquetLake:
         }
         if not plan.entries:
             return out
-        # the probe and bounded collect search() runs, so the counts are
-        # the units search() fetches (stale entries dropped, de-duplicated)
-        cand_list = self._probe_units(index, plan, query)
-        if cand_list is BRUTE_FORCE:
-            out["decision"] = "brute_force_flag"
+        units = self._probe_units(index, plan, query)
+        out["decision"] = self._decision(units)
+        if units is None or units is BRUTE_FORCE:
             return out
-        if cand_list is None:
-            out["decision"] = "brute_force_threshold"
-            return out
-        n = len(cand_list)
-        if any(rg != WHOLE_FILE for _, rg in cand_list):
+        n = len(units)
+        if any(rg != WHOLE_FILE for _, rg in units):
             from rottnest_spark.core.layout import extract_layout
 
             total = extract_layout(self.spark, plan.covered_files).count()
@@ -890,7 +802,6 @@ class ParquetLake:
         out["n_candidates"] = n
         out["total_units"] = total
         out["pruning_ratio"] = round(n / total, 4) if total else None
-        out["decision"] = "index_scan" if n else "empty"
         return out
 
     # -- summary estimates ----------------------------------------------------
@@ -909,14 +820,7 @@ class ParquetLake:
         from rottnest_spark.indices.sketches import StatsSketchIndex
 
         idx = index or StatsSketchIndex()
-        scope = files if files is not None else self.files
-        plan = plan_search(
-            self.catalog,
-            idx.index_type,
-            column,
-            scope,
-            expect_config=IndexCatalog.config_json(**idx.config()),
-        )
+        plan = self._plan(idx, column, self.files if files is None else files)
         if not plan.entries:
             return {
                 "estimate": None,
@@ -933,18 +837,6 @@ class ParquetLake:
         out["uncovered_files"] = len(plan.unindexed_files)
         return out
 
-    def _summary_plan(self, idx, column: str, files: list[str] | None):
-        from rottnest_spark.core.catalog import IndexCatalog as _IC
-
-        scope = files if files is not None else self.files
-        return plan_search(
-            self.catalog,
-            idx.index_type,
-            column,
-            scope,
-            expect_config=_IC.config_json(**idx.config()),
-        )
-
     def quantile_estimate(
         self,
         column: str,
@@ -958,7 +850,7 @@ class ParquetLake:
         from rottnest_spark.indices.sketches import QuantileSketchIndex
 
         idx = index or QuantileSketchIndex()
-        plan = self._summary_plan(idx, column, files)
+        plan = self._plan(idx, column, self.files if files is None else files)
         if not plan.entries:
             return {
                 "quantiles": {},
@@ -988,7 +880,7 @@ class ParquetLake:
         from rottnest_spark.indices.sketches import ThetaSketchIndex
 
         idx = index or ThetaSketchIndex()
-        plan = self._summary_plan(idx, column, list(files_a) + list(files_b))
+        plan = self._plan(idx, column, list(files_a) + list(files_b))
         if not plan.entries:
             return {
                 "a": 0,
@@ -1044,43 +936,33 @@ class ParquetLake:
         """Exact `count(*) WHERE column == query` with the covering-index
         fast path: covered files are counted from the index's per-key row
         counts alone (ExactIndex.count_key — no data fetch); only
-        unindexed files pay a refine scan. Falls back to a refine count
-        over covered files for indexes without index-only counting."""
-        plan = plan_search(
-            self.catalog,
-            index.index_type,
-            column,
-            self._search_files(),
-            expect_config=IndexCatalog.config_json(**index.config()),
-        )
-        total = 0
-        if plan.entries:
-            paths = [e["index_path"] for e in plan.entries]
-            n = None
-            # index-ONLY counts include row-deleted rows — under
-            # merge-on-read state fall back to the refine count, which
-            # self.read() makes delete-exact
-            if hasattr(index, "count_key") and self._search_row_filter() is None:
-                entry_files = {f for e in plan.entries for f in e["file_paths"]}
-                stale_possible = bool(entry_files - set(plan.covered_files))
-                n = index.count_key(
-                    self.spark,
-                    paths,
-                    query,
-                    live_files=set(plan.covered_files)
-                    if stale_possible
-                    else None,
-                )
-            if n is None:
-                n = index.brute_force(
-                    self.read(plan.covered_files), column, query, None
-                ).count()
-            total += n
+        unindexed files pay a refine scan. Indexes without index-only
+        counting, and merge-on-read state (index counts would include
+        row-deleted rows), count the rows search() returns."""
+        plan = self._plan(index, column)
+        n = None
+        if (
+            plan.entries
+            and hasattr(index, "count_key")
+            and self._search_row_filter() is None
+        ):
+            entry_files = {f for e in plan.entries for f in e["file_paths"]}
+            n = index.count_key(
+                self.spark,
+                [e["index_path"] for e in plan.entries],
+                query,
+                live_files=set(plan.covered_files)
+                if entry_files - set(plan.covered_files)
+                else None,
+            )
+        if n is None:
+            units = self._probe_units(index, plan, query)
+            return self._answer(index, column, query, plan, units).count()
         if plan.unindexed_files:
-            total += index.brute_force(
+            n += index.brute_force(
                 self.read(plan.unindexed_files), column, query, None
             ).count()
-        return total
+        return n
 
     def key_histogram(
         self, index: SparkIndex, column: str, k: int | None = None
@@ -1092,13 +974,7 @@ class ParquetLake:
         otherwise. The 100 TB win: a GROUP BY over the whole lake becomes
         an aggregation of the key table (≤ one row per distinct
         (key, unit)) — data-proportional only in distinct keys."""
-        plan = plan_search(
-            self.catalog,
-            index.index_type,
-            column,
-            self._search_files(),
-            expect_config=IndexCatalog.config_json(**index.config()),
-        )
+        plan = self._plan(index, column)
         parts: list[DataFrame] = []
         covered_counted = False
         # index-only key counts include row-deleted rows — merge-on-read
@@ -1152,19 +1028,18 @@ class ParquetLake:
         full scan. The no-catalog fallback path for lakes that haven't
         built an ExactIndex yet (reference virtual mode,
         backends/utils.py:110-126)."""
+        pred = F.col(column).between(F.lit(lo), F.lit(hi))
+        return self._virtual_zone_search(column, lo, hi, pred, columns)
+
+    def _virtual_zone_search(self, column, lo, hi, pred, columns, prefix=False):
+        """Footer zone-map candidates → bounded collect → fetch → `pred`."""
         from rottnest_spark.core.layout import footer_zone_candidates
 
-        cands = footer_zone_candidates(self.spark, self._search_files(), column, lo, hi)
-        cand_list = collect_candidates_bounded(
-            cands, set(), set(self._search_files()), self.brute_force_threshold
+        files = self._search_files()
+        units = self._bound(
+            footer_zone_candidates(self.spark, files, column, lo, hi, prefix=prefix)
         )
-        if cand_list is None:
-            rows = self.read()
-        elif cand_list:
-            rows = self._read_candidate_units(cand_list)
-        else:
-            rows = self.read(self._search_files()[:1]).limit(0)
-        out = rows.filter(F.col(column).between(F.lit(lo), F.lit(hi)))
+        out = self._union([self._fetch(units, files)]).filter(pred)
         return out.select(*columns) if columns else out
 
     def maintenance_report(
@@ -1603,22 +1478,10 @@ class ParquetLake:
 
         if self.catalog.entries_for("exact", column):
             return self.search(PrefixSearch(), column, prefix, columns=columns)
-        from rottnest_spark.core.layout import footer_zone_candidates
-
-        cands = footer_zone_candidates(
-            self.spark, self._search_files(), column, prefix, None, prefix=True
+        pred = F.col(column).startswith(F.lit(prefix))
+        return self._virtual_zone_search(
+            column, prefix, None, pred, columns, prefix=True
         )
-        cand_list = collect_candidates_bounded(
-            cands, set(), set(self._search_files()), self.brute_force_threshold
-        )
-        if cand_list is None:
-            rows = self.read()
-        elif cand_list:
-            rows = self._read_candidate_units(cand_list)
-        else:
-            rows = self.read(self._search_files()[:1]).limit(0)
-        out = rows.filter(F.col(column).startswith(F.lit(prefix)))
-        return out.select(*columns) if columns else out
 
     def refresh_indices(
         self, orphan_min_age_sec: float = 0.0, timeout: float | None = None
@@ -1888,13 +1751,7 @@ class ParquetLake:
         files = self.files
         # candidate FILES via the search plan (row groups widen to files:
         # rewrites are per-file)
-        plan = plan_search(
-            self.catalog,
-            index.index_type,
-            column,
-            files,
-            expect_config=IndexCatalog.config_json(**index.config()),
-        )
+        plan = self._plan(index, column, files)
         touched = set(files) - set(plan.covered_files)  # in-situ: must check
         if plan.entries:
             cands = index.search(

@@ -197,12 +197,16 @@ class BM25Index(SparkIndex):
             pool.shutdown(wait=True)
             rows.unpersist()
 
-    def search(self, spark: SparkSession, index_paths: list[str], query: str):
+    def search(self, spark: SparkSession, index_paths: list[str], query):
         """Candidates = units containing ANY query token (union semantics —
-        BM25 scores rows with any overlap, unlike substring's all-grams)."""
-        return self.search_tokens(
-            spark, index_paths, self.tokenizer.query_tokens(query)
-        )
+        BM25 scores rows with any overlap, unlike substring's all-grams).
+        `query` is a string, or a list of tokens."""
+        return self.search_tokens(spark, index_paths, self._tokens(query))
+
+    def _tokens(self, query) -> list[str]:
+        if isinstance(query, list):
+            return query
+        return self.tokenizer.query_tokens(query)
 
     def search_tokens(
         self, spark: SparkSession, index_paths: list[str], toks: list[str]
@@ -218,9 +222,7 @@ class BM25Index(SparkIndex):
         )
 
     def search_local(self, spark: SparkSession, index_paths: list[str], query):
-        return self.search_tokens_local(
-            index_paths, self.tokenizer.query_tokens(query)
-        )
+        return self.search_tokens_local(index_paths, self._tokens(query))
 
     def search_tokens_local(self, index_paths: list[str], toks: list[str]):
         """search_tokens() over the footer-pruned postings slice: the unit
@@ -539,97 +541,65 @@ def bm25_topk(
     query token. With expansion_tokens > 0 (X7), the query grows to its
     nearest index-vocabulary tokens, similarity-weighted — exact for the
     expanded token set."""
-    from rottnest_spark.core.planner import plan_search
-    from rottnest_spark.core.refine import read_candidates
-
-    from rottnest_spark.core.catalog import IndexCatalog
-
-    spark = lake.spark
+    # `lake.files` refuses merge-on-read state: deleted rows would count
+    # in the corpus statistics
+    plan = lake._plan(index, column, lake.files)
     toks = index.tokenizer.query_tokens(query)
     weights = None
-    plan = plan_search(
-        lake.catalog,
-        index.index_type,
-        column,
-        lake.files,
-        expect_config=IndexCatalog.config_json(**index.config()),
-    )
     if expansion_tokens and plan.entries:
         vocab = scan_parquet(
-            spark, *[f"{e['index_path']}/stats" for e in plan.entries]
+            lake.spark, *[f"{e['index_path']}/stats" for e in plan.entries]
         )
         weights = expand_query(
-            spark, query, vocab, expansion_tokens, qtoks=toks
+            lake.spark, query, vocab, expansion_tokens, qtoks=toks
         )
         toks = sorted(weights)  # downstream candidate probes use all tokens
-
-    stat_parts, n_docs, total_len = [], 0, 0
-    cand_parts: list[DataFrame] = []
-
-    if plan.entries:
-        paths = [e["index_path"] for e in plan.entries]
-        # driver-side probe when both slices fit the budget: the stats
-        # come back as a {token: df} dict, so scoring needs no stats job
-        stats = index.stats_local(paths, toks)
-        cands = None if stats is None else index.search_tokens_local(paths, toks)
-        if cands is None:
-            stats = index.stats(spark, paths, toks)
-            cands = index.search_tokens(spark, paths, toks)
-        st, n, tl = stats
-        stat_parts.append(st)
-        n_docs += n
-        total_len += tl
-        from rottnest_spark.core.refine import collect_candidates_bounded
-
-        cand_list = collect_candidates_bounded(
-            cands,
-            {f for e in plan.entries for f in e["file_paths"]},
-            set(plan.covered_files),
-            lake.brute_force_threshold,
-        )
-        if cand_list is None:  # over threshold — never materialized
-            cand_parts.append(lake.read(plan.covered_files))
-        elif cand_list:
-            cand_parts.append(read_candidates(spark, cand_list))
-
-    if plan.unindexed_files:
-        raw = lake.read(plan.unindexed_files)
-        st, n, tl = derive_stats(
-            raw, column, toks, tok_col_fn=index.tokenizer.tokens_col
-        )
-        stat_parts.append(st)
-        n_docs += n
-        total_len += tl
-        cand_parts.append(raw)
-
-    if not cand_parts:
-        empty = lake.read(lake.files[:1]).limit(0)
-        return empty.select(id_col).withColumn("score", F.lit(0.0))
-
-    if len(stat_parts) == 1 and isinstance(stat_parts[0], dict):
-        stats_df = stat_parts[0]
-    else:
-        from rottnest_spark.core.smalldf import local_df
-
-        frames = [
-            local_df(spark, sorted(s.items()), "token string, df long", slices=1)
-            if isinstance(s, dict)
-            else s
-            for s in stat_parts
-        ]
-        stats_df = frames[0]
-        for s in frames[1:]:
-            stats_df = stats_df.unionByName(s)
-        stats_df = stats_df.groupBy("token").agg(F.sum("df").alias("df"))
-
-    rows = cand_parts[0]
-    for c in cand_parts[1:]:
-        rows = rows.unionByName(c)
+    stats, n_docs, total_len, raw = _corpus_stats(lake, index, column, plan, toks)
+    units = lake._probe_units(index, plan, toks)
+    rows = lake._union([lake._fetch(units, plan.covered_files), raw])
     return score_rows(
-        rows, column, toks, stats_df, n_docs, total_len,
+        rows, column, toks, stats, n_docs, total_len,
         id_col=id_col, k=k, weights=weights,
         tok_col_fn=index.tokenizer.tokens_col,
     )
+
+
+def _corpus_stats(lake, index: BM25Index, column: str, plan, toks: list[str]):
+    """(stats, n_docs, total_len, unindexed rows or None) for `toks`: the
+    index stats of the covered files — read on the driver when their
+    slices fit the budget — plus stats derived from the unindexed rows.
+    `stats` is a {token: df} dict when only the driver read contributed
+    (scoring then needs no stats job), else a (token, df) DataFrame."""
+    from rottnest_spark.core.smalldf import local_df
+
+    parts, n_docs, total_len = [], 0, 0
+    if plan.entries:
+        paths = [e["index_path"] for e in plan.entries]
+        st, n_docs, total_len = index.stats_local(paths, toks) or index.stats(
+            lake.spark, paths, toks
+        )
+        parts.append(st)
+    raw = lake.read(plan.unindexed_files) if plan.unindexed_files else None
+    if raw is not None:
+        st, n, tl = derive_stats(
+            raw, column, toks, tok_col_fn=index.tokenizer.tokens_col
+        )
+        parts.append(st)
+        n_docs += n
+        total_len += tl
+    if not parts or (len(parts) == 1 and isinstance(parts[0], dict)):
+        return (parts[0] if parts else {}), n_docs, total_len, raw
+    frames = [
+        local_df(lake.spark, sorted(s.items()), "token string, df long", slices=1)
+        if isinstance(s, dict)
+        else s
+        for s in parts
+    ]
+    stats = frames[0]
+    for s in frames[1:]:
+        stats = stats.unionByName(s)
+    stats = stats.groupBy("token").agg(F.sum("df").alias("df"))
+    return stats, n_docs, total_len, raw
 
 
 def bm25_topk_many(
@@ -640,110 +610,28 @@ def bm25_topk_many(
     k: int,
     id_col: str,
 ) -> DataFrame:
-    """Batched exact BM25: N queries share ONE stats scan, ONE postings
-    probe, and ONE unindexed stats derivation — only the per-query
-    candidate fetch and scoring remain per query (they touch per-query
-    data by construction). Per-query results ≡ bm25_topk(query), tagged
-    `__query__`. The bulk-retrieval shape (RAG eval sets, alert sweeps)
-    where at 100 TB the index scans dominate a single query's cost."""
-    from rottnest_spark.core.catalog import IndexCatalog
-    from rottnest_spark.core.planner import plan_search
-    from rottnest_spark.core.refine import (
-        collect_candidates_bounded,
-        read_candidates,
+    """Batched exact BM25: N queries share ONE stats read (over the union
+    of their tokens) and ONE unindexed stats derivation; each query's
+    candidates come from the lake's batched candidate stage, then its
+    fetch and scoring run as in bm25_topk. Per-query results ≡
+    bm25_topk(query), tagged `__query__`. The bulk-retrieval shape (RAG
+    eval sets, alert sweeps) where at 100 TB the index scans dominate a
+    single query's cost."""
+    plan = lake._plan(index, column, lake.files)
+    toks_by_q = [index.tokenizer.query_tokens(q) for q in queries]
+    union_toks = sorted({t for ts in toks_by_q for t in ts})
+    stats, n_docs, total_len, raw = _corpus_stats(
+        lake, index, column, plan, union_toks
     )
-
-    spark = lake.spark
-    toks_by_q = {q: index.tokenizer.query_tokens(q) for q in queries}
-    union_toks = sorted({t for ts in toks_by_q.values() for t in ts})
-    plan = plan_search(
-        lake.catalog,
-        index.index_type,
-        column,
-        lake.files,
-        expect_config=IndexCatalog.config_json(**index.config()),
-    )
-
-    stat_parts, n_docs, total_len = [], 0, 0
-    probe = None
-    if plan.entries:
-        paths = [e["index_path"] for e in plan.entries]
-        st, n, tl = index.stats(spark, paths, union_toks)
-        stat_parts.append(st)
-        n_docs += n
-        total_len += tl
-        postings = scan_parquet(spark, *[f"{p}/postings" for p in paths])
-        # one probe scan serves every query's candidate intersection
-        probe = (
-            postings.filter(F.col("token").isin(union_toks))
-            .select("token", "file_path", "row_group")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-
-    raw = lake.read(plan.unindexed_files) if plan.unindexed_files else None
-    if raw is not None:
-        st, n, tl = derive_stats(
-            raw, column, union_toks, tok_col_fn=index.tokenizer.tokens_col
-        )
-        stat_parts.append(st)
-        n_docs += n
-        total_len += tl
-
-    if not stat_parts:
-        empty = lake.read(lake.files[:1]).limit(0)
-        return (
-            empty.select(id_col)
-            .withColumn("score", F.lit(0.0))
-            .withColumn("__query__", F.lit(""))
-        )
-    stats_df = stat_parts[0]
-    for s in stat_parts[1:]:
-        stats_df = stats_df.unionByName(s)
-    stats_df = (
-        stats_df.groupBy("token").agg(F.sum("df").alias("df")).localCheckpoint()
-    )
-
-    outs: list[DataFrame] = []
-    for q in queries:
-        toks = toks_by_q[q]
-        cand_parts: list[DataFrame] = []
-        if probe is not None and toks:
-            cands = (
-                probe.filter(F.col("token").isin(toks))
-                .select("file_path", "row_group")
-                .distinct()
-            )
-            cand_list = collect_candidates_bounded(
-                cands,
-                {f for e in plan.entries for f in e["file_paths"]},
-                set(plan.covered_files),
-                lake.brute_force_threshold,
-            )
-            if cand_list is None:
-                cand_parts.append(lake.read(plan.covered_files))
-            elif cand_list:
-                cand_parts.append(read_candidates(spark, cand_list))
-        if raw is not None:
-            cand_parts.append(raw)
-        if not cand_parts:
-            continue
-        rows = cand_parts[0]
-        for c in cand_parts[1:]:
-            rows = rows.unionByName(c)
+    if not isinstance(stats, dict):
+        stats = stats.localCheckpoint()  # shared by every query's scoring
+    out = None
+    units_by_q = lake._probe_units_many(index, plan, toks_by_q)
+    for q, toks, units in zip(queries, toks_by_q, units_by_q):
+        rows = lake._union([lake._fetch(units, plan.covered_files), raw])
         scored = score_rows(
-            rows, column, toks, stats_df, n_docs, total_len,
+            rows, column, toks, stats, n_docs, total_len,
             id_col=id_col, k=k, tok_col_fn=index.tokenizer.tokens_col,
-        )
-        outs.append(scored.withColumn("__query__", F.lit(q)))
-    if not outs:
-        empty = lake.read(lake.files[:1]).limit(0)
-        return (
-            empty.select(id_col)
-            .withColumn("score", F.lit(0.0))
-            .withColumn("__query__", F.lit(""))
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
+        ).withColumn("__query__", F.lit(q))
+        out = scored if out is None else out.unionByName(scored)
     return out

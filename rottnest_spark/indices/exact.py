@@ -294,6 +294,10 @@ class PrefixSearch(ExactIndex):
     # the prefix probe reads the zone table, on Spark
     search_local = SparkIndex.search_local
 
+    def search_many(self, spark: SparkSession, index_paths: list[str], queries):
+        # ExactIndex's batched probe matches whole keys, not prefixes
+        return {q: self.search(spark, index_paths, q) for q in queries}
+
     def search(self, spark: SparkSession, index_paths: list[str], query):
         query = _hex_query(query)
         zones = scan_parquet(spark, *[f"{p}/zone" for p in index_paths])

@@ -810,50 +810,25 @@ def knn_topk(
     """Lake-level KNN: IVF-pruned (default) or exact full-scan (`exact=True`).
     Unindexed files are always scanned in-situ. Returns (id_col, dist),
     deterministically ordered by (dist, id)."""
-    from rottnest_spark.core.planner import plan_search
-    from rottnest_spark.core.refine import read_candidates
-
-    spark = lake.spark
     query_vec = list(query_vec)
-    plan = plan_search(lake.catalog, index.index_type, column, lake.files)
-    parts: list[DataFrame] = []
-
+    # `lake.files` refuses merge-on-read state, as every top-K path does
+    plan = lake._plan(index, column, lake.files, guard=False)
     if exact or not plan.entries:
-        parts.append(lake.read())
-    elif index.row_precision:
-        # 3-stage: probe -> approximate top-refine row addresses (PQ codes
-        # or Vamana graph) -> exact rerank of ONLY those rows
-        from rottnest_spark.core.refine import read_rows_at
-
-        paths = [e["index_path"] for e in plan.entries]
-        triples = index.search_pq(spark, paths, query_vec)
-        if triples:
-            parts.append(read_rows_at(spark, triples))
-        if plan.unindexed_files:
-            parts.append(lake.read(plan.unindexed_files))
+        rows = lake.read()
     else:
-        paths = [e["index_path"] for e in plan.entries]
-        cands = index.probe(spark, paths, query_vec)
-        from rottnest_spark.core.refine import collect_candidates_bounded
+        if index.row_precision:
+            # 3-stage: probe -> approximate top-refine row addresses (PQ
+            # codes or Vamana graph) -> exact rerank of ONLY those rows
+            from rottnest_spark.core.refine import read_rows_at
 
-        cand_list = collect_candidates_bounded(
-            cands,
-            {f for e in plan.entries for f in e["file_paths"]},
-            set(plan.covered_files),
-            lake.brute_force_threshold,
-        )
-        if cand_list is None:  # unselective probe — scan covered instead
-            parts.append(lake.read(plan.covered_files))
-        elif cand_list:
-            parts.append(read_candidates(spark, cand_list))
-        if plan.unindexed_files:
-            parts.append(lake.read(plan.unindexed_files))
-
-    if not parts:  # empty probe result and fully-covered lake
-        parts.append(lake.read().limit(0))
-    rows = parts[0]
-    for p in parts[1:]:
-        rows = rows.unionByName(p)
+            paths = [e["index_path"] for e in plan.entries]
+            triples = index.search_pq(lake.spark, paths, query_vec)
+            hits = read_rows_at(lake.spark, triples) if triples else None
+        else:
+            units = lake._probe_units(index, plan, query_vec)
+            hits = lake._fetch(units, plan.covered_files)
+        rest = plan.unindexed_files
+        rows = lake._union([hits, lake.read(rest) if rest else None])
     return (
         ensure_float_vectors(rows, column)
         .select(id_col, l2_dist_col(column, query_vec).alias("dist"))
@@ -881,18 +856,13 @@ def knn_topk_many(
     the IVF path, where each query's rows are pruned to its probed
     centroids' units first, so the shuffle carries only candidates.
 
-    IVF path: one centroid read picks every query's nprobes centroids, one
-    postings scan (centroid_id IN union of all probes) maps units→queries,
-    one candidate fetch covers the union of units; distances are computed
-    per (row, query) only for queries whose candidate set contains the
-    row's unit."""
-    from rottnest_spark.core.planner import plan_search
-    from rottnest_spark.core.refine import read_candidates
-    from rottnest_spark.sources.reader import read_parquet
-
-    spark = lake.spark
+    IVF path: each query's candidate units come from the lake's batched
+    candidate stage, as in knn_topk (a query over the threshold reads
+    every covered file); one fetch covers the union of units, and
+    distances are computed per (row, query) only for queries whose
+    candidate set contains the row's unit."""
     qitems = sorted(queries.items())
-    plan = plan_search(lake.catalog, index.index_type, column, lake.files)
+    plan = lake._plan(index, column, lake.files, guard=False)
 
     if plan.entries and not getattr(index, "has_postings", True):
         # graph indexes (Vamana) have no postings table to batch over —
@@ -933,66 +903,33 @@ def knn_topk_many(
         ).select(id_col, "s.__query__", "s.dist")
         return topk(scored)
 
-    # IVF: per-query probes -> one tagged postings scan -> union fetch
-    paths = [e["index_path"] for e in plan.entries]
-    probe_map: dict[tuple[str, int], list[str]] = {}
-    for qid, vec in qitems:
-        for p, cid in index.nearest_centroids(spark, paths, list(vec)):
-            probe_map.setdefault((p, cid), []).append(qid)
-
     unit_q: dict[tuple[str, int], set[str]] = {}
-    budget = lake.brute_force_threshold * max(1, len(qitems))
-    for p in paths:
-        cids = sorted({cid for (pp, cid) in probe_map if pp == p})
-        if not cids:
-            continue
-        # bounded collect: learn "too many" from at most budget+1 rows,
-        # never the full posting list (unselective-probe escape) — over
-        # budget the whole batch falls back to the one-scan exact path
-        hits = (
-            scan_parquet(spark, f"{p}/postings")
-            .filter(F.col("centroid_id").isin(cids))
-            .select("centroid_id", "file_path", "row_group")
-            .limit(budget + 1)
-            .collect()
-        )
-        if len(hits) > budget:
-            return knn_topk_many(
-                lake, index, column, queries, k, id_col, exact=True
-            )
-        budget -= len(hits)
-        for r in hits:
-            unit = (r["file_path"], r["row_group"])
-            for qid in probe_map.get((p, r["centroid_id"]), []):
-                unit_q.setdefault(unit, set()).add(qid)
+    units_by_q = lake._probe_units_many(index, plan, [v for _, v in qitems])
+    for (qid, _), units in zip(qitems, units_by_q):
+        if units is None:
+            units = [(f, WHOLE_FILE) for f in plan.covered_files]
+        for unit in units:
+            unit_q.setdefault(unit, set()).add(qid)
 
-    parts: list[DataFrame] = []
-    if unit_q:
-        # group units by the SET of queries interested in them: one fetch
-        # per distinct query-set (≤ 2^N in theory, a handful in practice),
-        # each tagged with its qids array — no per-row unit join needed
-        by_qset: dict[tuple[str, ...], list[tuple[str, int]]] = {}
-        for unit, qs in unit_q.items():
-            by_qset.setdefault(tuple(sorted(qs)), []).append(unit)
-        for qset, units in sorted(by_qset.items()):
-            chunk = read_candidates(spark, sorted(units)).withColumn(
-                "__qids__", F.array(*[F.lit(q) for q in qset])
-            )
-            parts.append(chunk)
+    def tagged(df: DataFrame, qids) -> DataFrame:
+        qids = F.array(*[F.lit(q) for q in qids]).cast("array<string>")
+        return df.withColumn("__qids__", qids)
+
+    # group units by the SET of queries interested in them: one fetch
+    # per distinct query-set (≤ 2^N in theory, a handful in practice),
+    # each tagged with its qids array — no per-row unit join needed
+    by_qset: dict[tuple[str, ...], list[tuple[str, int]]] = {}
+    for unit, qs in unit_q.items():
+        by_qset.setdefault(tuple(sorted(qs)), []).append(unit)
+    parts = [
+        tagged(lake._read_candidate_units(sorted(units)), qset)
+        for qset, units in sorted(by_qset.items())
+    ]
     if plan.unindexed_files:
-        all_q = F.array(*[F.lit(qid) for qid, _ in qitems])
         parts.append(
-            lake.read(plan.unindexed_files).withColumn("__qids__", all_q)
+            tagged(lake.read(plan.unindexed_files), [q for q, _ in qitems])
         )
-    if not parts:
-        parts.append(
-            lake.read().limit(0).withColumn(
-                "__qids__", F.array().cast("array<string>")
-            )
-        )
-    rows = parts[0]
-    for p in parts[1:]:
-        rows = rows.unionByName(p)
+    rows = lake._union(parts or [tagged(lake._empty(), [])])
     rows = ensure_float_vectors(rows, column)
     # distance only for (row, query) pairs the pruning admitted
     dist = None

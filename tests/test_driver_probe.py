@@ -1,7 +1,8 @@
 """The driver-side probe (`SparkIndex.search_local`, over footer-pruned
 pyarrow slices of the index tables) against the Spark probe (`search`):
 identical unit lists and identical BRUTE_FORCE / empty / over-threshold
-decisions for the exact, substring, BM25 and vector indexes.
+decisions for the exact, substring, BM25 and vector indexes — and every
+search entry point equal to the full scan on the same lake.
 
 The lake carries the cases a probe must get right: a stale entry (a data
 file deleted after it was indexed), a file covered twice (a lost
@@ -20,10 +21,10 @@ from rottnest_spark.core.catalog import IndexCatalog
 from rottnest_spark.core.planner import plan_search
 from rottnest_spark.core.refine import collect_candidates_bounded
 from rottnest_spark.indices.base import BRUTE_FORCE
-from rottnest_spark.indices.bm25 import BM25Index, bm25_topk
-from rottnest_spark.indices.exact import ExactIndex
+from rottnest_spark.indices.bm25 import BM25Index, bm25_topk, bm25_topk_many
+from rottnest_spark.indices.exact import ExactIndex, PrefixSearch
 from rottnest_spark.indices.substring import SubstringIndex
-from rottnest_spark.indices.vector import VectorIndex, knn_topk
+from rottnest_spark.indices.vector import VectorIndex, knn_topk, knn_topk_many
 
 N = 600
 K = 10
@@ -346,3 +347,67 @@ def test_over_budget_takes_the_spark_path(spark, lake):
 def test_unreadable_index_path_takes_the_spark_path(spark, tmp_path):
     assert reader.read_index_slice([str(tmp_path / "missing")], "k", [1], ["k"]) is None
     assert reader.read_index_slice(["relative/path"], "k", [1], ["k"]) is None
+
+
+def test_entry_points_equal_brute_force(spark, lake):
+    """Every entry point returns the full-scan answer on this lake, with
+    its stale entry and doubly covered file: search_many, single-spec
+    search_disj and search_conj, and count_matches for a point hit, a
+    point miss, a key of the deleted file and a substring; the batched
+    top-K drivers equal their single-query forms query by query."""
+    hit = lake.read().select("key").collect()[7]["key"]
+    for name, queries in (
+        ("key", [hit, "key-99999", "key-00000"]),
+        ("text", ["uniq00017z", "uniq00000z", "tok13 uniq"]),
+    ):
+        idx, column = INDEXES[name], _column(name)
+        many = lake.search_many(idx, column, queries)
+        for q in queries:
+            want = _oracle(lake, column, idx.predicate(column, q))
+            assert _ids(many.filter(F.col("__query__") == q)) == want, q
+            assert _ids(lake.search_disj([(idx, column, q)])) == want, q
+            assert _ids(lake.search_conj([(idx, column, q)])) == want, q
+            assert lake.count_matches(idx, column, q) == len(want), q
+
+    def by_query(df, value):
+        out = {}
+        for r in df.collect():
+            out.setdefault(r["__query__"], []).append((r["rid"], r[value]))
+        return out
+
+    idx = INDEXES["bm25"]
+    queries = ["tok05 uniq00100z", "common tok13", "nosuchtoken"]
+    many = by_query(bm25_topk_many(lake, idx, "text", queries, K, "rid"), "score")
+    for q in queries:
+        one = bm25_topk(lake, idx, "text", q, K, "rid").collect()
+        one = [(r["rid"], r["score"]) for r in one]
+        assert sorted(many.get(q, [])) == sorted(one), q
+
+    idx = INDEXES["emb"]
+    vecs = {"a": [0.3, -0.4, 0.5], "b": [0.9, 0.1, 0.0], "c": [-0.5, 0.5, 0.2]}
+    many = by_query(knn_topk_many(lake, idx, "emb", vecs, K, "rid"), "dist")
+    for qid, vec in vecs.items():
+        one = knn_topk(lake, idx, "emb", vec, K, "rid").collect()
+        one = [(r["rid"], r["dist"]) for r in one]
+        assert sorted(many[qid]) == sorted(one) and len(one) == K, qid
+
+
+def test_prefix_specs_probe_as_prefixes(spark, lake):
+    """PrefixSearch rides the exact index's tables: batched and in a
+    disjunction beside an ExactIndex spec, each prefix still probes as a
+    prefix, never as a whole key."""
+    exact, prefix = INDEXES["key"], PrefixSearch()
+    many = lake.search_many(prefix, "key", ["key-001", "key-0062"])
+    for q in ("key-001", "key-0062"):
+        want = _oracle(lake, "key", F.col("key").startswith(q))
+        assert _ids(many.filter(F.col("__query__") == q)) == want and want
+    specs = [(exact, "key", "key-00300"), (prefix, "key", "key-0010"),
+             (prefix, "key", "key-0062")]
+    want = _oracle(
+        lake,
+        "key",
+        (F.col("key") == "key-00300")
+        | F.col("key").startswith("key-0010")
+        | F.col("key").startswith("key-0062"),
+    )
+    assert _ids(lake.search_disj(specs)) == want

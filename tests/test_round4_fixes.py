@@ -269,6 +269,14 @@ def test_insitu_scan_early_stops_on_k(spark, tmp_path):
         "f5.parquet", "f4.parquet",
     ]
 
+    # search_many takes the same early stop for each query
+    del lake._insitu_files_scanned
+    many = lake.search_many(idx, "tag", ["m1"], k=5).collect()
+    assert len(many) == 5 and all(r["tag"] == "m1" for r in many)
+    assert [os.path.basename(f) for f in lake._insitu_files_scanned] == [
+        "f5.parquet", "f4.parquet",
+    ]
+
     # unbatched correctness: no k → full lazy scan, all matches
     all_rows = lake.search(idx, "tag", "m1").count()
     assert all_rows == 200
@@ -279,7 +287,10 @@ def test_insitu_scan_early_stops_on_k(spark, tmp_path):
 
 def test_search_disj_batches_same_index_specs(spark, tmp_path):
     """N specs over the same (index, column) must issue ONE batched probe
-    (search_many), not N serial searches."""
+    (search_many), not N serial searches, when the probes run on Spark
+    (index slices over the driver-probe budget); under the budget they
+    run on the driver and issue no Spark probe at all."""
+    import rottnest_spark.sources.reader as reader
     from rottnest_spark.indices.substring import SubstringIndex
 
     df = spark.createDataFrame(
@@ -303,16 +314,24 @@ def test_search_disj_batches_same_index_specs(spark, tmp_path):
         calls["single"] += 1
         return orig_single(spark_, paths, q)
 
-    idx.search_many, idx.search = counting_many, counting_single
-    try:
-        got = sorted(
+    def disj():
+        return sorted(
             r["id"]
             for r in lake.search_disj(
                 [(idx, "text", "tag_3"), (idx, "text", "tag_5")]
             ).collect()
         )
+
+    idx.search_many, idx.search = counting_many, counting_single
+    budget = reader._SLICE_BUDGET
+    try:
+        on_driver = disj()
+        assert calls == {"many": 0, "single": 0}
+        reader._SLICE_BUDGET = 0
+        got = disj()
     finally:
         idx.search_many, idx.search = orig_many, orig_single
+        reader._SLICE_BUDGET = budget
     assert calls == {"many": 1, "single": 0}
     expected = sorted(
         r["id"]
@@ -320,7 +339,7 @@ def test_search_disj_batches_same_index_specs(spark, tmp_path):
             F.col("text").contains("tag_3") | F.col("text").contains("tag_5")
         ).collect()
     )
-    assert got == expected
+    assert got == on_driver == expected
 
 
 # -- binary payload substring search -----------------------------------------

@@ -88,6 +88,21 @@ def test_point_miss_runs_no_job(spark, warm_lake):
     assert n == 0, f"point miss ran {n} jobs"
 
 
+def test_composites_probe_on_the_driver(spark, warm_lake):
+    """search_many over three point keys and search_disj over two run no
+    Spark job until their result is collected: one plan, driver probes."""
+    lake, idx, hits = warm_lake
+    keys = hits + ["no-such-key"]
+    for kind, call in (
+        ("many", lambda: lake.search_many(idx, "key", keys, k=10)),
+        ("disj", lambda: lake.search_disj([(idx, "key", q) for q in hits])),
+    ):
+        out = []
+        n = _count_jobs(spark, f"jobs-{kind}", lambda: out.append(call()))
+        assert n == 0, f"{kind} ran {n} jobs before the collect"
+        assert sorted(r["key"] for r in out[0].collect()) == sorted(hits)
+
+
 @pytest.fixture(scope="module")
 def text_lake(spark, tmp_path_factory):
     """A 2-file lake with substring, BM25 and vector indexes, warmed."""
@@ -155,7 +170,9 @@ def test_pooled_build_chains_inherit_the_job_group(spark, tmp_path):
         ],
     )
     assert n > 0
-    assert set(tracker.getJobIdsForGroup(None)) == before
+    # no new job without a group; old ones may leave the tracker once the
+    # session has run more than spark.ui.retainedJobs (1000) jobs
+    assert not set(tracker.getJobIdsForGroup(None)) - before
 
 
 def _write(path, table):
