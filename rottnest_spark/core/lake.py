@@ -360,28 +360,14 @@ class ParquetLake:
         return self._probe_units_many(index, plan, [query])[0]
 
     def _probe_units_many(self, index: SparkIndex, plan, queries: list) -> list:
-        """`_bound` of each query's probe over the plan's entries, [] for
-        every query when no entry covers the plan. A probe runs on the
-        driver when its index slice fits (`SparkIndex.search_local`); the
-        queries it cannot serve share one Spark `search_many` pass where
-        the index has one (point probes only — range tuples take
-        `search`), else each runs `search`."""
+        """`_bound` of each query's probe over the plan's entries
+        (`SparkIndex._probe_many`: on the driver where the index slice
+        fits, the rest in one Spark pass), [] for every query when no
+        entry covers the plan."""
         if not plan.entries:
             return [[] for _ in queries]
         paths = [e["index_path"] for e in plan.entries]
-        cands = [index.search_local(self.spark, paths, q) for q in queries]
-        todo = [i for i, c in enumerate(cands) if c is None]
-        if (
-            len(todo) > 1
-            and hasattr(index, "search_many")
-            and not any(isinstance(queries[i], tuple) for i in todo)
-        ):
-            by_q = index.search_many(self.spark, paths, [queries[i] for i in todo])
-            for i in todo:
-                cands[i] = by_q[queries[i]]
-        else:
-            for i in todo:
-                cands[i] = index.search(self.spark, paths, queries[i])
+        cands = index._probe_many(self.spark, paths, queries)
         return [self._bound(c, plan) for c in cands]
 
     def _fetch(self, units, files: list[str]) -> DataFrame | None:
@@ -527,8 +513,10 @@ class ParquetLake:
         one batched candidate stage serve every query (driver probes,
         else one Spark `search_many` pass), then each query runs
         search()'s fetch, early-stop in-situ scan and refine."""
-        if queries:
-            self._refuse_topk_under_deletes(index, column, queries[0])
+        if not queries:
+            out = self._empty().select(*(columns or ["*"]))
+            return out.withColumn("__query__", F.lit(""))
+        self._refuse_topk_under_deletes(index, column, queries[0])
         plan = self._plan(index, column)
         units = self._probe_units_many(index, plan, queries)
         outs = [

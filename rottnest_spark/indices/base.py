@@ -65,12 +65,30 @@ class SparkIndex(ABC):
         driver implementation, slice over budget, unreadable path)."""
         return None
 
+    def search_many(self, spark: SparkSession, index_paths: list[str], queries):
+        """search() of each query, in query order. Indexes whose probes
+        can share one index scan override it (one pass for N queries)."""
+        return [self.search(spark, index_paths, q) for q in queries]
+
     def probe(self, spark: SparkSession, index_paths: list[str], query):
-        """Candidates for `query`: search_local()'s unit list when the
-        probe ran on the driver, else search()'s DataFrame; BRUTE_FORCE
-        either way. `core.refine.collect_candidates_bounded` takes both."""
-        local = self.search_local(spark, index_paths, query)
-        return self.search(spark, index_paths, query) if local is None else local
+        """Candidates for one query (see `_probe_many`)."""
+        return self._probe_many(spark, index_paths, [query])[0]
+
+    def _probe_many(self, spark: SparkSession, index_paths: list[str], queries):
+        """Each query's candidates, in query order: search_local()'s unit
+        list when the probe ran on the driver; the queries it cannot
+        serve run on Spark, several in one search_many() pass, one alone
+        in search(); BRUTE_FORCE either way.
+        `core.refine.collect_candidates_bounded` takes every form."""
+        cands = [self.search_local(spark, index_paths, q) for q in queries]
+        todo = [i for i, c in enumerate(cands) if c is None]
+        if len(todo) > 1:
+            remote = self.search_many(spark, index_paths, [queries[i] for i in todo])
+        else:
+            remote = [self.search(spark, index_paths, queries[i]) for i in todo]
+        for i, c in zip(todo, remote):
+            cands[i] = c
+        return cands
 
     @abstractmethod
     def brute_force(

@@ -221,6 +221,31 @@ class BM25Index(SparkIndex):
             .distinct()
         )
 
+    def search_many(self, spark: SparkSession, index_paths: list[str], queries):
+        """Batched probe: ONE postings scan over the union of the queries'
+        tokens, its units tagged by query and kept once; per-query
+        semantics identical to search(). Candidates in query order."""
+        from rottnest_spark.core.smalldf import local_df
+
+        tags = sorted({(i, t) for i, q in enumerate(queries) for t in self._tokens(q)})
+        postings = scan_parquet(spark, *[f"{p}/postings" for p in index_paths])
+        hits = (
+            postings.filter(F.col("token").isin(sorted({t for _, t in tags})))
+            .join(
+                F.broadcast(
+                    local_df(spark, tags, "__q int, token string", slices=1)
+                ),
+                "token",
+            )
+            .select("__q", "file_path", "row_group")
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        return [
+            hits.filter(F.col("__q") == i).select("file_path", "row_group")
+            for i in range(len(queries))
+        ]
+
     def search_local(self, spark: SparkSession, index_paths: list[str], query):
         return self.search_tokens_local(index_paths, self._tokens(query))
 
@@ -612,11 +637,16 @@ def bm25_topk_many(
 ) -> DataFrame:
     """Batched exact BM25: N queries share ONE stats read (over the union
     of their tokens) and ONE unindexed stats derivation; each query's
-    candidates come from the lake's batched candidate stage, then its
-    fetch and scoring run as in bm25_topk. Per-query results ≡
+    candidates come from the lake's batched candidate stage (driver
+    probes, else one shared postings scan: `BM25Index.search_many`), then
+    its fetch and scoring run as in bm25_topk. Per-query results ≡
     bm25_topk(query), tagged `__query__`. The bulk-retrieval shape (RAG
     eval sets, alert sweeps) where at 100 TB the index scans dominate a
     single query's cost."""
+    if not queries:
+        return lake._empty().select(
+            id_col, F.lit(0.0).alias("score"), F.lit("").alias("__query__")
+        )
     plan = lake._plan(index, column, lake.files)
     toks_by_q = [index.tokenizer.query_tokens(q) for q in queries]
     union_toks = sorted({t for ts in toks_by_q for t in ts})

@@ -203,13 +203,15 @@ class ExactIndex(SparkIndex):
         return int(row["n"] or 0)
 
     def search_many(
-
         self, spark: SparkSession, index_paths: list[str], queries: list
-    ) -> dict:
+    ) -> list:
         """Batched point lookups: one key-table (or zone) scan covers every
         key via an IN-list — the min/max-sorted index prunes row groups for
-        the whole batch at once, versus one scan per key."""
-        probes = [_hex_query(q) for q in queries]
+        the whole batch at once, versus one scan per key. Range tuples
+        take search(). Candidates in query order."""
+        probes = [_hex_query(q) for q in queries if not isinstance(q, tuple)]
+        if not probes:
+            return [self.search(spark, index_paths, q) for q in queries]
         if self.store_keys:
             keys = scan_parquet(spark, *[f"{p}/keys" for p in index_paths])
             hits = (
@@ -218,21 +220,26 @@ class ExactIndex(SparkIndex):
                 .distinct()
                 .localCheckpoint(eager=True)
             )
-            return {
-                q: hits.filter(F.col("key") == F.lit(p)).select(
-                    "file_path", "row_group"
+
+            def point(p):
+                return hits.filter(F.col("key") == F.lit(p))
+
+        else:
+            zones = scan_parquet(
+                spark, *[f"{p}/zone" for p in index_paths]
+            ).localCheckpoint(eager=True)
+
+            def point(p):
+                return zones.filter(
+                    (F.col("min_key") <= F.lit(p)) & (F.col("max_key") >= F.lit(p))
                 )
-                for q, p in zip(queries, probes)
-            }
-        zones = scan_parquet(
-            spark, *[f"{p}/zone" for p in index_paths]
-        ).localCheckpoint(eager=True)
-        return {
-            q: zones.filter(
-                (F.col("min_key") <= F.lit(p)) & (F.col("max_key") >= F.lit(p))
-            ).select("file_path", "row_group")
-            for q, p in zip(queries, probes)
-        }
+
+        return [
+            self.search(spark, index_paths, q)
+            if isinstance(q, tuple)
+            else point(_hex_query(q)).select("file_path", "row_group")
+            for q in queries
+        ]
 
     def search_range(self, spark: SparkSession, index_paths: list[str], lo, hi):
         """Candidate units whose key range intersects [lo, hi] — the classic
@@ -294,9 +301,8 @@ class PrefixSearch(ExactIndex):
     # the prefix probe reads the zone table, on Spark
     search_local = SparkIndex.search_local
 
-    def search_many(self, spark: SparkSession, index_paths: list[str], queries):
-        # ExactIndex's batched probe matches whole keys, not prefixes
-        return {q: self.search(spark, index_paths, q) for q in queries}
+    # ExactIndex's batched probe matches whole keys, not prefixes
+    search_many = SparkIndex.search_many
 
     def search(self, spark: SparkSession, index_paths: list[str], query):
         query = _hex_query(query)

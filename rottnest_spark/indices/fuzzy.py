@@ -138,12 +138,12 @@ def _search_many(self, spark, index_paths, queries):
         .distinct()
         .localCheckpoint(eager=True)
     )
-    return {
-        q: hits.filter(F.col("variant").isin(vs))
+    return [
+        hits.filter(F.col("variant").isin(per_q[q]))
         .select("file_path", "row_group")
         .distinct()
-        for q, vs in per_q.items()
-    }
+        for q in queries
+    ]
 
 
 FuzzyIndex.search_many = _search_many

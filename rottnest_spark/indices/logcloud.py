@@ -426,7 +426,7 @@ class LogIndex(SparkIndex):
 
     def search_many(
         self, spark: SparkSession, index_paths: list[str], queries: list[str]
-    ) -> dict:
+    ) -> list:
         """Batched probe: N queries share ONE dict scan (which tokens are
         dict-routed and cannot prune) and ONE variables scan (a unit×token
         hit matrix, metadata-scale), instead of 2×Σtokens serial jobs.
@@ -436,7 +436,7 @@ class LogIndex(SparkIndex):
         all_toks = sorted({t for ts in toks_by_q.values() for t in ts})
         out: dict[str, object] = {}
         if not all_toks:
-            return {q: BRUTE_FORCE for q in queries}
+            return [BRUTE_FORCE for _ in queries]
 
         def type_ok(t: str):
             m = type_bitmask(t)
@@ -493,7 +493,7 @@ class LogIndex(SparkIndex):
                 c = F.col(flag_of[t]) == 1
                 cond = c if cond is None else (cond & c)
             out[q] = matrix.filter(cond).select("file_path", "row_group")
-        return out
+        return [out[q] for q in queries]
 
     def predicate(self, column: str, query: str):
         # case-SENSITIVE containment (reference indices/logcloud_index.py:62)

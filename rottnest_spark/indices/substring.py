@@ -568,18 +568,18 @@ class SubstringIndex(SparkIndex):
 
     def search_many(
         self, spark: SparkSession, index_paths: list[str], queries: list[str]
-    ) -> dict:
+    ) -> list:
         """Batched probe: N queries share ONE df pass and ONE postings pass
         over the gram table instead of 2N index scans — the amortization a
         bulk evaluation workload (eval-set leak scans, alert rule sweeps)
         needs at 100 TB, where each index scan is the dominant cost.
-        Returns {query: candidates DataFrame | BRUTE_FORCE} with identical
-        per-query semantics to search()."""
+        Returns each query's candidates DataFrame | BRUTE_FORCE, in query
+        order, with identical per-query semantics to search()."""
         per_q = {q: self.query_grams(q) for q in queries}
         out: dict = {q: BRUTE_FORCE for q, g in per_q.items() if not g}
         batched = {q: g for q, g in per_q.items() if g}
         if not batched:
-            return out
+            return [out[q] for q in queries]
         all_grams = sorted({g for gs in batched.values() for g in gs})
         idx = scan_parquet(spark, *index_paths)
         df_rows = (
@@ -607,7 +607,7 @@ class SubstringIndex(SparkIndex):
             else:
                 probes[q] = probe
         if not probes:
-            return out
+            return [out[q] for q in queries]
         probe_union = sorted({g for gs in probes.values() for g in gs})
         # one postings scan for every query; the (gram, unit) table is
         # |probe grams| x |units| — metadata-scale — and feeds N per-query
@@ -628,7 +628,7 @@ class SubstringIndex(SparkIndex):
                 .filter(F.col("count") >= len(probe))
                 .select("file_path", "row_group")
             )
-        return out
+        return [out[q] for q in queries]
 
     # -- exact refine (F1, indices/substring_index.py:19-21) -------------------
 

@@ -222,7 +222,7 @@ class SuffixArrayIndex(SparkIndex):
 
     def search_many(
         self, spark: SparkSession, index_paths: list[str], queries: list
-    ) -> dict:
+    ) -> list:
         """Batched probe: N needles share ONE range-pruned scan of the
         suffix table (the OR of N prefix ranges pushes down as one scan
         filter); per-needle semantics identical to search()."""
@@ -230,7 +230,7 @@ class SuffixArrayIndex(SparkIndex):
         out: dict = {q: BRUTE_FORCE for q, p in probes.items() if p is None}
         todo = {q: p for q, p in probes.items() if p is not None}
         if not todo:
-            return out
+            return [out[q] for q in queries]
         idx = scan_parquet(spark, *index_paths)
         pred = None
         for p in todo.values():
@@ -285,7 +285,7 @@ class SuffixArrayIndex(SparkIndex):
                 out[q] = cands.filter(F.col("__q__") == str(i)).select(
                     "file_path", "row_group"
                 )
-        return out
+        return [out[q] for q in queries]
 
     # -- exact refine (F1 contract, indices/substring_index.py:19-21) ----------
 

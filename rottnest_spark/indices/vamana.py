@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from rottnest_spark.indices.base import SparkIndex
 from rottnest_spark.indices.vector import (
     VectorIndex,
     _lloyd_gemm,
@@ -165,6 +166,8 @@ class VamanaIndex(VectorIndex):
 
     index_type = "vamana"
     has_postings = False  # graph table instead; knn_topk_many loops
+    # no postings table to share: each query's graph probe is its own scan
+    search_many = SparkIndex.search_many
 
     def __init__(
         self,

@@ -615,35 +615,56 @@ class VectorIndex(SparkIndex):
 
     def search(self, spark: SparkSession, index_paths: list[str], query_vec):
         probes = self.nearest_centroids(spark, index_paths, list(query_vec))
-        if not probes:
-            return spark.createDataFrame([], "file_path string, row_group int")
+        return self._probed_postings(spark, [probes]).select("file_path", "row_group")
+
+    def search_many(self, spark: SparkSession, index_paths: list[str], queries):
+        """Batched probe: each query's nearest centroids, then ONE postings
+        scan over every query's probed (entry, centroid) pairs, its units
+        tagged by query and kept once; per-query semantics identical to
+        search(). Candidates in query order."""
+        probes = [self.nearest_centroids(spark, index_paths, list(q)) for q in queries]
+        hits = self._probed_postings(spark, probes).localCheckpoint(eager=True)
+        return [
+            hits.filter(F.col("__q") == i).select("file_path", "row_group")
+            for i in range(len(queries))
+        ]
+
+    def _probed_postings(self, spark: SparkSession, probes_by_q: list):
+        """Distinct (__q, file_path, row_group): the units in the postings
+        of query __q's probed (index_path, centroid_id) pairs, for every
+        query in one scan of the probed entries. The coarse isin prunes
+        row groups (centroid_id-sorted tables); the broadcast join on
+        (entry, centroid_id) enforces per-entry probe membership exactly."""
         import re
 
-        by_path: dict[str, list[int]] = {}
-        for p, cid in probes:
-            by_path.setdefault(p, []).append(cid)
-        # one scan of every probed entry's postings; the coarse isin prunes
-        # row groups (centroid_id-sorted tables), the broadcast semi-join on
-        # (entry, centroid_id) enforces per-entry probe membership exactly
-        all_cids = sorted({cid for cids in by_path.values() for cid in cids})
         from rottnest_spark.core.smalldf import local_df
 
-        pairs = local_df(
-            spark,
-            [
-                (re.sub("^file:/+", "/", p), int(cid))
-                for p, cids in by_path.items()
-                for cid in cids
-            ],
-            "__entry string, centroid_id int",
-            slices=1,
+        tags = sorted(
+            {
+                (i, re.sub("^file:/+", "/", p), int(cid))
+                for i, probes in enumerate(probes_by_q)
+                for p, cid in probes
+            }
         )
+        if not tags:
+            return spark.createDataFrame(
+                [], "__q int, file_path string, row_group int"
+            )
+        paths = {f"{p}/postings" for probes in probes_by_q for p, _ in probes}
         return (
-            scan_parquet(spark, *[f"{p}/postings" for p in by_path])
-            .filter(F.col("centroid_id").isin(all_cids))
+            scan_parquet(spark, *sorted(paths))
+            .filter(F.col("centroid_id").isin(sorted({t[2] for t in tags})))
             .withColumn("__entry", self._entry_of_col())
-            .join(F.broadcast(pairs), ["__entry", "centroid_id"], "left_semi")
-            .select("file_path", "row_group")
+            .join(
+                F.broadcast(
+                    local_df(
+                        spark, tags, "__q int, __entry string, centroid_id int",
+                        slices=1,
+                    )
+                ),
+                ["__entry", "centroid_id"],
+            )
+            .select("__q", "file_path", "row_group")
             .distinct()
         )
 
@@ -858,9 +879,14 @@ def knn_topk_many(
 
     IVF path: each query's candidate units come from the lake's batched
     candidate stage, as in knn_topk (a query over the threshold reads
-    every covered file); one fetch covers the union of units, and
+    every covered file; probes over the driver budget share one postings
+    scan, `VectorIndex.search_many`); one fetch covers the union of units, and
     distances are computed per (row, query) only for queries whose
     candidate set contains the row's unit."""
+    if not queries:
+        return lake._empty().select(
+            id_col, F.lit("").alias("__query__"), F.lit(0.0).alias("dist")
+        )
     qitems = sorted(queries.items())
     plan = lake._plan(index, column, lake.files, guard=False)
 

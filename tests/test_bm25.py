@@ -153,6 +153,9 @@ def test_bm25_topk_many_equals_per_query(spark, sf_dir, tmp_path):
             for r in bm25_topk(lake, idx, "text", q, 10, "doc_id").collect()
         )
         assert got == want, q
+    empty = bm25_topk_many(lake, idx, "text", [], 10, "doc_id")
+    assert empty.columns == ["doc_id", "score", "__query__"]
+    assert empty.collect() == []
 
 
 def test_bm25_recall_ladder_pinned(spark, docs_lake_dir, tmp_path):

@@ -175,6 +175,14 @@ def _oracle(lake, column, pred):
     return _ids(lake.read().filter(pred))
 
 
+def _by_query(df, value):
+    """{__query__: [(rid, value)]} of a batched top-K result."""
+    out = {}
+    for r in df.collect():
+        out.setdefault(r["__query__"], []).append((r["rid"], r[value]))
+    return out
+
+
 def test_exact_parity_and_full_scan_equality(spark, lake):
     idx = INDEXES["key"]
     live = [r["key"] for r in lake.read().select("key").collect()]
@@ -369,15 +377,9 @@ def test_entry_points_equal_brute_force(spark, lake):
             assert _ids(lake.search_conj([(idx, column, q)])) == want, q
             assert lake.count_matches(idx, column, q) == len(want), q
 
-    def by_query(df, value):
-        out = {}
-        for r in df.collect():
-            out.setdefault(r["__query__"], []).append((r["rid"], r[value]))
-        return out
-
     idx = INDEXES["bm25"]
     queries = ["tok05 uniq00100z", "common tok13", "nosuchtoken"]
-    many = by_query(bm25_topk_many(lake, idx, "text", queries, K, "rid"), "score")
+    many = _by_query(bm25_topk_many(lake, idx, "text", queries, K, "rid"), "score")
     for q in queries:
         one = bm25_topk(lake, idx, "text", q, K, "rid").collect()
         one = [(r["rid"], r["score"]) for r in one]
@@ -385,11 +387,77 @@ def test_entry_points_equal_brute_force(spark, lake):
 
     idx = INDEXES["emb"]
     vecs = {"a": [0.3, -0.4, 0.5], "b": [0.9, 0.1, 0.0], "c": [-0.5, 0.5, 0.2]}
-    many = by_query(knn_topk_many(lake, idx, "emb", vecs, K, "rid"), "dist")
+    many = _by_query(knn_topk_many(lake, idx, "emb", vecs, K, "rid"), "dist")
     for qid, vec in vecs.items():
         one = knn_topk(lake, idx, "emb", vec, K, "rid").collect()
         one = [(r["rid"], r["dist"]) for r in one]
         assert sorted(many[qid]) == sorted(one) and len(one) == K, qid
+    # an empty batch is an empty tagged frame
+    assert lake.search_many(INDEXES["key"], "key", []).collect() == []
+    empty = knn_topk_many(lake, idx, "emb", {}, K, "rid")
+    assert empty.columns == ["rid", "__query__", "dist"] and empty.collect() == []
+
+
+def test_batched_spark_probe_is_one_pass_in_query_order(spark, lake):
+    """Over the driver budget, an index's search_many answers each query
+    in query order with search()'s units — repeated queries, a range
+    beside point keys, token lists and vectors included — and the
+    batched top-K drivers probe in one search_many pass, never one
+    search per query, with the same rows as their single-query forms."""
+    hit = lake.read().select("key").collect()[7]["key"]
+    cases = {
+        "key": [hit, "key-99999", ("key-00100", "key-00140"), hit],
+        "text": ["uniq00017z", "tok13 uniq", "uniq00017z"],
+        "bm25": [["tok05", "uniq00100z"], ["common"], ["nosuchtoken"], ["tok05"]],
+        "emb": [[0.3, -0.4, 0.5], [0.9, 0.1, 0.0], [0.3, -0.4, 0.5]],
+    }
+    with _budget(0):
+        for name, queries in cases.items():
+            idx, column = INDEXES[name], _column(name)
+            _, paths = _plan(lake, idx, column)
+            many = idx.search_many(spark, paths, queries)
+            assert len(many) == len(queries)
+            for q, got in zip(queries, many):
+                want = idx.search(spark, paths, q)
+                if want is BRUTE_FORCE or got is BRUTE_FORCE:
+                    assert got is want, (name, q)
+                else:
+                    assert _units(got) == _units(want), (name, q)
+
+    calls = []
+
+    class Counting:
+        def __init__(self, idx):
+            self.idx = idx
+
+        def __enter__(self):
+            for name in ("search", "search_many"):
+                orig = getattr(self.idx, name)
+                setattr(self.idx, name, lambda *a, n=name, f=orig: calls.append(n) or f(*a))
+
+        def __exit__(self, *exc):
+            del self.idx.search, self.idx.search_many
+
+    queries = ["tok05 uniq00100z", "common tok13", "nosuchtoken"]
+    idx = INDEXES["bm25"]
+    with _budget(0):
+        with Counting(idx):
+            many = _by_query(bm25_topk_many(lake, idx, "text", queries, K, "rid"), "score")
+        assert calls == ["search_many"]
+        for q in queries:
+            one = bm25_topk(lake, idx, "text", q, K, "rid").collect()
+            assert sorted(many.get(q, [])) == sorted((r["rid"], r["score"]) for r in one), q
+
+    calls.clear()
+    vecs = {"a": [0.3, -0.4, 0.5], "b": [0.9, 0.1, 0.0]}
+    idx = INDEXES["emb"]
+    with _budget(0):
+        with Counting(idx):
+            many = _by_query(knn_topk_many(lake, idx, "emb", vecs, K, "rid"), "dist")
+        assert calls == ["search_many"]
+        for qid, vec in vecs.items():
+            one = knn_topk(lake, idx, "emb", vec, K, "rid").collect()
+            assert sorted(many[qid]) == sorted((r["rid"], r["dist"]) for r in one), qid
 
 
 def test_prefix_specs_probe_as_prefixes(spark, lake):
